@@ -13,8 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import (_read_deletes, _read_manifest, _read_pages,
-                     live_manifest, read_committed_pages)
+from .engine import (_read_deletes, _read_manifest, live_manifest,
+                     read_committed_pages)
 
 
 def history(spark: SparkSession, dst: str) -> DataFrame:
@@ -25,9 +25,7 @@ def history(spark: SparkSession, dst: str) -> DataFrame:
     Columns: committed_at, op, run_id, parts, rows, enc_bytes,
     supersedes (count of tombstoned parts)."""
     m = _read_manifest(spark, dst)
-    has_repl = "replaces" in m.columns
-    repl_n = (F.size(F.coalesce(F.col("replaces"), F.array()))
-              if has_repl else F.lit(0))
+    repl_n = F.size(F.coalesce(F.col("replaces"), F.array()))
     runs = (m.withColumn("_r", repl_n)
             .groupBy("run_id")
             .agg(F.max("committed_at").alias("committed_at"),
@@ -41,10 +39,8 @@ def history(spark: SparkSession, dst: str) -> DataFrame:
                     "enc_bytes", "supersedes"))
     dels = _read_deletes(spark, dst)
     if dels is not None:
-        dcol = (F.max("created_at") if "created_at" in dels.columns
-                else F.lit(None).cast("timestamp"))
         drows = (dels.groupBy("delete_id")
-                 .agg(dcol.alias("committed_at"),
+                 .agg(F.max("created_at").alias("committed_at"),
                       F.count("*").alias("parts"),
                       F.sum("n_del").alias("rows"),
                       F.sum(F.octet_length("bitmap")).alias("enc_bytes"))

@@ -13,8 +13,8 @@ Lifecycle of ``encode_table``::
 ``run_encode`` adds the durable layer: pages parquet + per-partition
 manifest with run/attempt lineage; reruns anti-join the manifest and only
 encode missing parts (checkpoint resume, BASELINE.json:14). Orphan pages
-from a crashed run are ignored by readers because decode joins pages
-against the committed manifest on (part_id, run_id).
+from a crashed run are ignored by readers because a read keeps only the
+(part_id, run_id) pairs the committed manifest names.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .codecs import fsst, pagecodec
+from .interop import read_rows
 from .partitioning import (EncodeConfig, cluster_by_part, effective_parts,
                            with_part_id)
 from .select import choose_codec_arrow
@@ -150,6 +151,49 @@ def _bloom_hashes(arr: pa.Array, tag: str) -> np.ndarray | None:
     # floats/arrays: equality pruning is not meaningful; date/decimal:
     # no int/str probe form on the lookup side — absence means "scan"
     return None
+
+
+def _probe_hashes(values: list) -> np.ndarray | None:
+    """Bloom hashes of lookup values (all str/bytes or all int); None
+    for an empty list."""
+    import numbers
+    if not values:
+        return None
+    if all(isinstance(v, (str, bytes)) for v in values):
+        return _bloom_hashes(pa.array([v.decode() if isinstance(v, bytes)
+                                       else v for v in values]), "str")
+    if all(isinstance(v, numbers.Integral)      # incl. numpy integer
+           and not isinstance(v, (bool, np.bool_)) for v in values):
+        return _bloom_hashes(pa.array([int(v) for v in values], pa.int64()),
+                             "i64")
+    raise TypeError(
+        "bloom probes must be all-str/bytes or all-int, got "
+        f"{sorted({type(v).__name__ for v in values})}")
+
+
+def _bloom_maybe(params: list[str], data: pa.Array,
+                 hashes: np.ndarray) -> np.ndarray:
+    """The bloom probe: row i (``params[i]``, ``data[i]`` of one
+    ``__bloom__`` sidecar) MAYBE holds any of ``hashes``. Each row is
+    probed at its own bit count ``m`` (rows are grouped by m), so a
+    dataset whose bloom_bits changed between appends never computes a
+    wrong bit position — a silent false NEGATIVE."""
+    ms = np.array([int(json.loads(p)["m"]) for p in params], np.int64)
+    h1s = [int(h) & 0xFFFFFFFF for h in hashes]
+    h2s = [int(h) >> 32 for h in hashes]
+    hit = np.zeros(len(ms), dtype=bool)
+    for m in np.unique(ms):
+        idx = np.nonzero(ms == m)[0]
+        buf = np.concatenate(
+            [np.frombuffer(data[int(i)].as_py(), np.uint8)
+             for i in idx]).reshape(len(idx), int(m) // 8)
+        for h1, h2 in zip(h1s, h2s):
+            ok = np.ones(len(idx), dtype=bool)
+            for ki in range(_BLOOM_K):
+                p = (h1 + ki * h2) % int(m)
+                ok &= (buf[:, p // 8] >> (p % 8)) & 1 == 1
+            hit[idx] |= ok
+    return hit
 
 
 _HLL_P = 12                     # 2^12 registers = 4 KiB per (part, column)
@@ -513,8 +557,9 @@ def decode_table(pages: DataFrame, spark: SparkSession | None = None,
     """pages DataFrame -> original rows (grouped per-part reassembly).
 
     ``columns`` = [(name, tag), ...] in col_idx order; when omitted, taken
-    from the hint ``encode_table`` attached, else discovered with a
-    (costly) distinct scan over the pages.
+    from the layout the frame carries (``encode_table``, a durable
+    read's snapshot), else discovered with a (costly) distinct scan over
+    the pages (``_column_layout``).
 
     ``colocated=True`` skips the groupBy SHUFFLE and reassembles per
     PHYSICAL partition (one mapInArrow pass): legal ONLY when every
@@ -532,19 +577,7 @@ def decode_table(pages: DataFrame, spark: SparkSession | None = None,
     grouped path (hash-pinned). A page_id-prefix guard raises on the
     common violation (a part's page run not starting at 0 in its
     partition); prefer the default grouped path when unsure."""
-    columns = columns or getattr(pages, "_cps_columns", None)
-    if columns is None:
-        meta = (pages.filter(F.col("col_idx") >= 0)
-                     .select("column", "col_idx", "type")
-                     .distinct().orderBy("col_idx").collect())
-        # dedup by name: appended runs may place the same column at a
-        # different col_idx (schema evolution), and a column dropped by
-        # a later run still decodes (as NULL for runs that lack it)
-        seen, columns = set(), []
-        for r in meta:
-            if r["column"] not in seen:
-                seen.add(r["column"])
-                columns.append((r["column"], r["type"]))
+    columns = columns or _column_layout(pages)
     cols = [c for c, _ in columns]
     tags = [t for _, t in columns]
     out_fields = [T.StructField(c, pagecodec.spark_type_for(t)) for c, t in zip(cols, tags)]
@@ -697,15 +730,7 @@ def decode_table(pages: DataFrame, spark: SparkSession | None = None,
                 yield from decode_part(sub).to_batches()
         return pages.mapInArrow(decode_partition, out_schema)
 
-    grouped = pages.groupBy("part_id")
-    if hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(lambda t: decode_part(t), out_schema)
-
-    def decode_part_pandas(pdf):
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-        return decode_part(tbl).to_pandas()
-
-    return grouped.applyInPandas(decode_part_pandas, out_schema)
+    return pages.groupBy("part_id").applyInArrow(decode_part, out_schema)
 
 
 # zone-map text -> SQL cast target per tag (see pagecodec.page_minmax);
@@ -733,6 +758,34 @@ def _zone_lit(v, cast: str | None):
     if cast is not None and cast.startswith("decimal"):
         return F.lit(str(v)).cast(cast)
     return F.lit(v)
+
+
+def _first_by_name(layout) -> list[tuple[str, str]]:
+    """(name, tag) pairs in col_idx order, each name once: appended runs
+    may place the same column at a different col_idx (schema
+    evolution), and a column dropped by a later run still decodes (as
+    NULL for runs that lack it)."""
+    seen: set = set()
+    out = []
+    for c, t in layout:
+        if c not in seen:
+            seen.add(c)
+            out.append((c, t))
+    return out
+
+
+def _column_layout(pages: DataFrame) -> list[tuple[str, str]]:
+    """The table's columns [(name, tag), ...] in col_idx order: the
+    layout the frame carries (``encode_table`` output, a durable read's
+    snapshot), else one distinct scan over the FULL pages — discovery on
+    a pruned frame could see no part and yield a zero-column schema."""
+    hint = getattr(pages, "_cps_columns", None)
+    if hint is not None:
+        return hint
+    meta = (pages.filter(F.col("col_idx") >= 0)
+            .select("column", "col_idx", "type")
+            .distinct().orderBy("col_idx", "column").collect())
+    return _first_by_name((r["column"], r["type"]) for r in meta)
 
 
 def _column_tag(pages: DataFrame, column: str,
@@ -785,30 +838,32 @@ def decode_where(pages: DataFrame, column: str, lo=None, hi=None,
 
     Parts (not pages) are the pruning unit because page cuts are
     per-column independent — dropping one column's page would misalign
-    row reassembly across columns. At 100 TB this is row-group-level
-    skipping: the pruning subquery reads only the small metadata
-    columns of the pages table, and the semi join broadcasts the
-    surviving part-id list.
+    row reassembly across columns. A durable read's frame
+    (``read_live_pages``) prunes (part_id, run_id)s on the driver from
+    its snapshot's zone maps and runs no Spark job to plan; any other
+    frame prunes with ``prune_parts``, one metadata-only Spark job whose
+    survivors come to the driver.
 
     ``more``: extra conjunctive predicates [(column, lo, hi), ...] —
     each prunes independently and the surviving-part sets intersect
     (AND semantics), then every residual filter applies post-decode."""
-    cols_hint = columns or getattr(pages, "_cps_columns", None)
-    if cols_hint is None:
-        # discover the layout from the FULL pages: a predicate that
-        # prunes every part would otherwise leave discovery a
-        # zero-column schema and the residual filter unresolvable
-        meta = (pages.filter(F.col("col_idx") >= 0)
-                .select("column", "col_idx", "type")
-                .distinct().orderBy("col_idx").collect())
-        cols_hint = [(r["column"], r["type"]) for r in meta]
+    cols_hint = columns or _column_layout(pages)
     preds = [(column, lo, hi)] + list(more or [])
-    parts = None
-    for col, plo, phi in preds:
-        p = prune_parts(pages, col, plo, phi,
-                        tag=_column_tag(pages, col, cols_hint))
-        parts = p if parts is None else parts.join(p, "part_id", "left_semi")
-    pruned = _keep_parts(pages, parts, ["part_id"])
+    snap = getattr(pages, "_cps_snapshot", None)
+    if snap is not None:
+        keys = ["part_id", "run_id"]
+        parts = set.intersection(*[
+            snap.zone_pairs(col, plo, phi, _column_tag(pages, col, cols_hint))
+            for col, plo, phi in preds])
+    else:
+        keys = ["part_id"]
+        parts = None
+        for col, plo, phi in preds:
+            p = prune_parts(pages, col, plo, phi,
+                            tag=_column_tag(pages, col, cols_hint))
+            parts = (p if parts is None
+                     else parts.join(p, "part_id", "left_semi"))
+    pruned = _keep_parts(pages, parts, keys)
     out = decode_table(pruned, spark, columns=cols_hint)
     for col, plo, phi in preds:
         tag = _column_tag(pages, col, cols_hint)
@@ -947,6 +1002,45 @@ def scan_column(pages: DataFrame, column: str, lo=None, hi=None,
 # durable layer: pages + manifest on disk, resumable
 # ---------------------------------------------------------------------------
 
+#: read schemas of the durable layout. Every reader passes them, so no
+#: read runs a schema-inference job and ``run_id`` stays the string it
+#: was written as: partition-value inference would type a lone
+#: ``run_id=1e10`` directory as a double and ``run_id=0123`` as 123.
+PAGES_READ_SCHEMA = T.StructType(
+    PAGES_SCHEMA.fields + [T.StructField("run_id", T.StringType())])
+
+#: written by manifest_from_pages (run_encode, compact_parts,
+#: _rewrite_parts); ``replaces`` only on compaction/rewrite rows
+MANIFEST_SCHEMA = T.StructType([
+    T.StructField("table", T.StringType()),
+    T.StructField("part_id", T.IntegerType()),
+    T.StructField("num_pages", T.LongType()),
+    T.StructField("raw_bytes", T.LongType()),
+    T.StructField("enc_bytes", T.LongType()),
+    T.StructField("codecs", T.ArrayType(T.StringType())),
+    T.StructField("columns", T.ArrayType(T.StringType())),
+    T.StructField("num_rows", T.LongType()),
+    T.StructField("encode_wall_s", T.DoubleType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("num_parts", T.IntegerType()),
+    T.StructField("committed_at", T.TimestampType()),
+    T.StructField("replaces", T.ArrayType(T.StructType([
+        T.StructField("part_id", T.IntegerType()),
+        T.StructField("run_id", T.StringType())]))),
+])
+
+#: written by _delete_pass
+DELETES_SCHEMA = T.StructType([
+    T.StructField("part_id", T.IntegerType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("n_rows", T.LongType()),
+    T.StructField("n_del", T.LongType()),
+    T.StructField("bitmap", T.BinaryType()),
+    T.StructField("delete_id", T.StringType()),
+    T.StructField("created_at", T.TimestampType()),
+])
+
+
 def manifest_from_pages(pages_meta: DataFrame, run_id: str,
                         cfg: EncodeConfig) -> DataFrame:
     data_pages = pages_meta.filter(F.col("col_idx") >= 0)
@@ -985,7 +1079,7 @@ def run_encode(spark: SparkSession, df: DataFrame, dst: str,
     manifest_dir = os.path.join(dst, "manifest")
     done = None
     if resume and _exists(spark, manifest_dir):
-        done = spark.read.parquet(manifest_dir).select("part_id").distinct()
+        done = _read_manifest(spark, dst).select("part_id").distinct()
     cols, tags = encodable_columns(df, ignore_columns)
     src = with_part_id(df.select(*cols), cfg)
     if done is not None:
@@ -1022,20 +1116,14 @@ def run_encode(spark: SparkSession, df: DataFrame, dst: str,
 
 
 def _read_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
-    """Read a run_id-partitioned pages dir with run_id pinned to string.
-
-    Partition-value inference could type an all-digit run_id as a number,
-    which would break the string equi-joins against the manifest."""
-    df = spark.read.parquet(pages_dir)
-    if "run_id" in df.columns:
-        df = df.withColumn("run_id", F.col("run_id").cast("string"))
-    return df
+    """Read a run_id-partitioned pages dir (``PAGES_READ_SCHEMA``)."""
+    return spark.read.schema(PAGES_READ_SCHEMA).parquet(pages_dir)
 
 
 def _read_manifest(spark: SparkSession, dst: str) -> DataFrame:
-    """Manifest reader. mergeSchema because compaction rows add the
-    optional ``replaces`` column (absent = plain encode row)."""
-    return (spark.read.option("mergeSchema", "true")
+    """Manifest reader (``MANIFEST_SCHEMA``; ``replaces`` is NULL on
+    plain encode rows)."""
+    return (spark.read.schema(MANIFEST_SCHEMA)
             .parquet(os.path.join(dst, "manifest")))
 
 
@@ -1045,8 +1133,6 @@ def live_manifest(manifest: DataFrame) -> DataFrame:
     INSIDE the compaction run's own manifest rows, so supersede + commit
     are one parquet append — no window where both or neither copy of the
     data is visible."""
-    if "replaces" not in manifest.columns:
-        return manifest
     tomb = (manifest.filter(F.col("replaces").isNotNull())
             .select(F.explode("replaces").alias("t"))
             .select(F.col("t.part_id").alias("part_id"),
@@ -1065,11 +1151,292 @@ def _manifest_cutoff(manifest: DataFrame, as_of) -> DataFrame:
         F.col("committed_at") <= F.lit(as_of).cast("timestamp"))
 
 
+# --- driver-side read planning ------------------------------------------------
+#
+# A durable read plans from ONE metadata snapshot taken on the driver
+# with pyarrow, so building the frame runs no Spark job: each job costs
+# ~70-100 ms of scheduling whatever the data size, and a lookup planned
+# with Spark jobs launches 23 of them before its own frame runs.
+
+#: the pages' small columns: everything a plan needs, never a page blob
+_META_COLS = ["part_id", "run_id", "column", "col_idx", "type", "codec",
+              "min_v", "max_v"]
+
+_ARROW_PAIR = [("part_id", pa.int32()), ("run_id", pa.string())]
+
+
+def _local_root(dst: str) -> str | None:
+    """Filesystem path of a local dataset, None for any other scheme
+    (those keep the Spark planning path)."""
+    if dst.startswith("file:"):
+        from urllib.parse import urlparse
+        return urlparse(dst).path
+    return None if "://" in dst else dst
+
+
+def _as_of_micros(spark: SparkSession, as_of) -> int | None:
+    """``F.lit(as_of).cast("timestamp")`` as epoch microseconds, computed
+    on the driver: a naive datetime is local time (pyspark's own
+    conversion), a string or date without a zone is in the session time
+    zone. None when the form is not understood here (the caller then
+    plans with Spark, which applies its own cast)."""
+    import datetime as dt
+    from zoneinfo import ZoneInfo
+    try:
+        tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+        if isinstance(as_of, str):
+            as_of = dt.datetime.fromisoformat(as_of.strip())
+            if as_of.tzinfo is None:
+                as_of = as_of.replace(tzinfo=tz)
+        elif isinstance(as_of, dt.date) and not isinstance(as_of,
+                                                           dt.datetime):
+            as_of = dt.datetime.combine(as_of, dt.time(), tzinfo=tz)
+        if not isinstance(as_of, dt.datetime):
+            return None
+        return T.TimestampType().toInternal(as_of)
+    except (ValueError, KeyError, OSError):
+        return None
+
+
+def _zone_may_hit(mn, mx, lo, hi, conv) -> bool:
+    """``prune_parts``' keep predicate for one page, on the driver: the
+    page may hold a value in [lo, hi]. A NULL zone, or a bound that does
+    not compare in the zone's domain, keeps the page."""
+    try:
+        if lo is not None and mx is not None and conv(mx) < lo:
+            return False
+        if hi is not None and mn is not None and conv(mn) > hi:
+            return False
+    except (TypeError, ValueError, ArithmeticError):
+        pass
+    return True
+
+
+def _zone_domain(cast: str | None):
+    """Zone text -> comparable Python value, per ``_zone_cast`` target."""
+    from decimal import Decimal
+    if cast is None:
+        return str
+    if cast.startswith("decimal"):
+        return lambda v: Decimal(str(v))
+    return int if cast == "long" else float
+
+
+class _Snapshot:
+    """The plan input of one durable read, taken once on the driver.
+
+    ``pyarrow.dataset`` reads the manifest, the ``deletes/`` index and
+    the pages' metadata columns (``_META_COLS``) of the live runs, never
+    a page blob. Driver memory: one metadata row per live page (plus the
+    manifest and delete index, one row per part); a bloom probe adds the
+    probed column's bloom rows (``bloom_pairs``). From that it answers,
+    without a Spark job: the live (part_id, run_id) set (``replaces``
+    tombstones and the ``as_of`` cut-off applied), the column layout,
+    zone-map survivors and bloom survivors. ``frame`` turns a survivor
+    set into the pages DataFrame to decode."""
+
+    def __init__(self, dst: str, files: list[str], live: set,
+                 meta: pa.Table, del_pairs: set, cutoff: int | None):
+        self.dst = dst
+        self.files = files                  # the live runs' pages files
+        self.live = live                    # manifest-live pairs
+        self.meta = meta                    # their pages' metadata rows,
+        #                                     with __file/__row positions
+        self.del_pairs = del_pairs          # live pairs with delete rows
+        self.cutoff = cutoff                # as_of, epoch us, or None
+
+    @classmethod
+    def read(cls, spark: SparkSession, dst: str, as_of=None,
+             deletes: bool = True) -> "_Snapshot | None":
+        """None when the dataset is not on a local filesystem, has no
+        manifest, or ``as_of`` is in a form only Spark parses — the
+        caller then plans with Spark jobs as before."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+        root = _local_root(dst)
+        if root is None or not os.path.isdir(os.path.join(root, "manifest")):
+            return None
+        cutoff = None
+        if as_of is not None:
+            cutoff = _as_of_micros(spark, as_of)
+            if cutoff is None:
+                return None
+        mani = ds.dataset(os.path.join(root, "manifest"), format="parquet",
+                          schema=_MANIFEST_ARROW).to_table()
+        if cutoff is not None:
+            mani = mani.filter(pc.less_equal(
+                mani["committed_at"].cast(pa.int64()), cutoff))
+        tomb = pc.list_flatten(mani["replaces"])
+        dead = set(zip(pc.struct_field(tomb, [0]).to_pylist(),
+                       pc.struct_field(tomb, [1]).to_pylist()))
+        live = set(zip(mani["part_id"].to_pylist(),
+                       mani["run_id"].to_pylist())) - dead
+        live_tbl = pa.Table.from_pylist(
+            [{"part_id": p, "run_id": r} for p, r in live],
+            schema=pa.schema(_ARROW_PAIR))
+        pages_dir = os.path.join(root, "pages")
+        files: list[str] = []
+        meta = _META_SCHEMA.empty_table()
+        if live and os.path.isdir(pages_dir):
+            runs = sorted({r for _, r in live})
+            parts = []
+            for frag in _pages_dataset(pages_dir).get_fragments(
+                    filter=ds.field("run_id").isin(runs)):
+                t = pq.ParquetFile(frag.path).read(
+                    columns=[c for c in _META_COLS if c != "run_id"])
+                n = t.num_rows
+                rid = ds.get_partition_keys(frag.partition_expression)
+                t = (t.append_column("run_id",
+                                     pa.array([rid["run_id"]] * n, pa.string()))
+                     .append_column("__file", pa.array(
+                         np.full(n, len(files), np.int32)))
+                     .append_column("__row", pa.array(
+                         np.arange(n, dtype=np.int64))))
+                parts.append(t.select(_META_SCHEMA.names).cast(_META_SCHEMA))
+                files.append(frag.path)
+            if parts:
+                meta = pa.concat_tables(parts).join(
+                    live_tbl, ["part_id", "run_id"], join_type="left semi")
+        del_pairs: set = set()
+        del_dir = os.path.join(root, "deletes")
+        if deletes and os.path.isdir(del_dir):
+            d = ds.dataset(del_dir, format="parquet",
+                           schema=_DELETES_ARROW).to_table()
+            if cutoff is not None:
+                d = d.filter(pc.less_equal(
+                    d["created_at"].cast(pa.int64()), cutoff))
+            del_pairs = set(zip(d["part_id"].to_pylist(),
+                                d["run_id"].to_pylist())) & live
+        return cls(dst, files, live, meta, del_pairs, cutoff)
+
+    def _rows(self, *names, where=None) -> list:
+        t = self.meta if where is None else self.meta.filter(where)
+        return list(zip(*(t[n].to_pylist() for n in names)))
+
+    def layout(self) -> list[tuple[str, str]]:
+        import pyarrow.compute as pc
+        rows = sorted(set(self._rows(
+            "col_idx", "column", "type",
+            where=pc.greater_equal(self.meta["col_idx"], 0))))
+        return _first_by_name((c, t) for _, c, t in rows)
+
+    def page_pairs(self) -> set:
+        """Live pairs that hold any page row."""
+        return set(self._rows("part_id", "run_id"))
+
+    def zone_pairs(self, column: str, lo, hi, tag: str | None) -> set:
+        """Pairs whose zone maps for ``column`` may intersect [lo, hi]
+        (``prune_parts`` semantics, bounds in the zone domain)."""
+        import pyarrow.compute as pc
+        cast = _zone_cast(tag)
+        conv = _zone_domain(cast)
+        if cast is not None and cast.startswith("decimal"):
+            # bounds may be str/Decimal/int/float, as in _zone_lit
+            lo, hi = (None if b is None else conv(b) for b in (lo, hi))
+        m = self.meta
+        keep: set = set()
+        for p, r, mn, mx in self._rows(
+                "part_id", "run_id", "min_v", "max_v",
+                where=pc.and_(pc.equal(m["column"], column),
+                              pc.greater_equal(m["col_idx"], 0))):
+            if (p, r) not in keep and _zone_may_hit(mn, mx, lo, hi, conv):
+                keep.add((p, r))
+        return keep
+
+    def bloom_pairs(self, column: str, values: list) -> set | None:
+        """Bloom MAYBE-hit pairs for ``values`` plus every pair with no
+        bloom row for ``column`` (absence means scan); None when the
+        column has no bloom rows at all. The metadata rows locate the
+        column's bloom rows in their files, and ``interop.read_rows``
+        decodes only the parquet pages of ``params``/``data`` that hold
+        them (a ``data`` page may also hold page blobs)."""
+        import pyarrow.compute as pc
+        m = self.meta
+        where = pc.and_(pc.equal(m["codec"], "__bloom__"),
+                        pc.equal(m["column"], column))
+        indexed = set(self._rows("part_id", "run_id", where=where))
+        if not indexed:
+            return None
+        hits: set = set()
+        hashes = _probe_hashes(values)
+        if hashes is not None:
+            rows = m.filter(where).sort_by([("__file", "ascending"),
+                                            ("__row", "ascending")])
+            fidx = rows["__file"].to_numpy()
+            pos = rows["__row"].to_numpy()
+            pairs = list(zip(rows["part_id"].to_pylist(),
+                             rows["run_id"].to_pylist()))
+            for f in np.unique(fidx):
+                at = np.flatnonzero(fidx == f)
+                path = self.files[int(f)]
+                maybe = _bloom_maybe(
+                    read_rows(path, "params", pos[at]).to_pylist(),
+                    read_rows(path, "data", pos[at]), hashes)
+                hits.update(pairs[i] for i, h in zip(at, maybe) if h)
+        return hits | (self.page_pairs() - indexed)
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """Pages plus delete rows of every live pair, planned without a
+        job: explicit-schema reads of the live runs' directories, cut by
+        ``_keep_parts`` (literal ``run_id IN`` and pair filters).
+        Carries the snapshot and its layout like ``encode_table`` output
+        carries ``_cps_columns``."""
+        if self.meta.num_rows:
+            # Spark lists only the live runs' directories, not every run's
+            pages_dir = os.path.join(self.dst, "pages")
+            run_dirs = sorted({os.path.basename(os.path.dirname(f))
+                               for f in self.files})
+            pages = (spark.read.schema(PAGES_READ_SCHEMA)
+                     .option("basePath", pages_dir)
+                     .parquet(*[os.path.join(pages_dir, d) for d in run_dirs]))
+        else:
+            pages = spark.createDataFrame([], PAGES_READ_SCHEMA)
+        if self.del_pairs:
+            dels = (spark.read.schema(DELETES_SCHEMA)
+                    .parquet(os.path.join(self.dst, "deletes")))
+            if self.cutoff is not None:
+                dels = dels.filter(
+                    f"created_at <= timestamp_micros({self.cutoff})")
+            # positional: _deletes_as_page_rows emits PAGES_READ_SCHEMA order
+            pages = pages.union(_deletes_as_page_rows(dels))
+        # one cut for both sides: Spark pushes it through the union into
+        # each scan (run_id IN becomes the pages' partition filter)
+        pages = _keep_parts(pages, self.live, ["part_id", "run_id"])
+        pages._cps_snapshot = self             # type: ignore[attr-defined]
+        pages._cps_columns = self.layout()     # type: ignore[attr-defined]
+        return pages
+
+
+_PAGES_DS_SCHEMA = _PAGES_ARROW.append(pa.field("run_id", pa.string()))
+#: snapshot metadata rows: _META_COLS plus each row's file and position
+_META_SCHEMA = pa.schema([_PAGES_DS_SCHEMA.field(c) for c in _META_COLS]
+                         + [("__file", pa.int32()), ("__row", pa.int64())])
+_MANIFEST_ARROW = pa.schema(_ARROW_PAIR + [
+    ("committed_at", pa.timestamp("us")),
+    ("replaces", pa.list_(pa.struct(_ARROW_PAIR)))])
+_DELETES_ARROW = pa.schema(_ARROW_PAIR + [("created_at", pa.timestamp("us"))])
+
+
+def _pages_dataset(pages_dir: str):
+    """pyarrow view of the pages dir, ``run_id`` a string partition."""
+    import pyarrow.dataset as ds
+    return ds.dataset(pages_dir, format="parquet", schema=_PAGES_DS_SCHEMA,
+                      partitioning=ds.partitioning(
+                          pa.schema([("run_id", pa.string())]),
+                          flavor="hive"))
+
+
 def read_committed_pages(spark: SparkSession, dst: str,
                          as_of=None) -> DataFrame:
     """Pages joined against the LIVE manifest — orphans from crashed runs
     and compaction-superseded parts both drop out. ``as_of`` reads the
-    snapshot as of that commit timestamp."""
+    snapshot as of that commit timestamp. A local dataset's frame is
+    planned on the driver from a ``_Snapshot`` (see ``read_live_pages``
+    for its memory footprint) and runs no Spark job to build."""
+    snap = _Snapshot.read(spark, dst, as_of, deletes=False)
+    if snap is not None:
+        return snap.frame(spark)
     pages = _read_pages(spark, os.path.join(dst, "pages"))
     mani = _read_manifest(spark, dst)
     if as_of is not None:
@@ -1237,9 +1604,13 @@ def decode_dataset(spark: SparkSession, dst: str,
                    columns: list[str] | None = None,
                    as_of=None) -> DataFrame:
     """Decode a durable dataset; ``where=(column, lo, hi)`` pushes the
-    predicate down to the on-disk zone maps (decode_where) — the pruning
-    scan reads only the pages parquet's metadata columns, never the
-    blobs, so at 100 TB a selective range touches a fraction of parts.
+    predicate down to the on-disk zone maps (decode_where), so a
+    selective range decodes a fraction of parts.
+
+    The read is planned on the driver from one metadata snapshot
+    (``read_live_pages``): building the returned frame runs no Spark
+    job. Driver memory: one metadata row per live page, plus the
+    manifest and delete index (one row per part).
 
     ``as_of`` (datetime or ISO timestamp string): time-travel snapshot —
     the table as committed at that instant (appends, compactions, purges
@@ -1254,22 +1625,22 @@ def decode_dataset(spark: SparkSession, dst: str,
     filter even when not projected, then dropped."""
     pages = read_live_pages(spark, dst, as_of=as_of)
     if columns is not None:
-        meta = (pages.filter(F.col("col_idx") >= 0)
-                .select("column", "col_idx", "type")
-                .distinct().orderBy("col_idx").collect())
-        known = [r["column"] for r in meta]
+        layout = _column_layout(pages)
+        known = [c for c, _ in layout]
         missing = [c for c in columns if c not in known]
         if missing:
             raise ValueError(f"decode_dataset: unknown columns {missing}; "
                              f"dataset has {known}")
         need = set(columns) | ({where[0]} if where is not None else set())
-        hint = [(r["column"], r["type"]) for r in meta
-                if r["column"] in need]
+        snap = getattr(pages, "_cps_snapshot", None)
         # DELETE_CODEC rows must survive the projection: deletion vectors
         # apply to every decode regardless of which columns are read
         pages = pages.filter(F.col("column").isin(list(need) + [DELETE_CODEC]))
-        # keep the hint on the filtered frame (decode_table reads it)
-        pages._cps_columns = hint
+        # keep the layout and snapshot on the filtered frame (decode_table
+        # and decode_where read them)
+        pages._cps_columns = [(c, t) for c, t in layout if c in need]
+        if snap is not None:
+            pages._cps_snapshot = snap
     if where is not None:
         column, lo, hi = where
         out = decode_where(pages, column, lo, hi, spark)
@@ -1281,8 +1652,7 @@ def decode_dataset(spark: SparkSession, dst: str,
 def eq_prune(pages: DataFrame, column: str, value) -> DataFrame:
     """Part ids whose bloom filter MAYBE contains ``value`` (metadata-only
     distributed scan over the 16 KiB-per-part sidecar rows — never the
-    data blobs; at 100 TB the bloom rows are ~0.03% of the dataset and
-    live in their own tiny row group band after the partitioned write).
+    data blobs; at 100 TB the bloom rows are ~0.03% of the dataset).
     Requires the column in ``EncodeConfig.bloom_cols`` at encode time;
     zone maps handle range predicates, blooms handle point lookups on
     hash-distributed columns where min/max never prunes."""
@@ -1308,25 +1678,10 @@ def in_prune(pages: DataFrame, column: str, values: list) -> DataFrame:
     if len(keys) == 2:
         fields.append(T.StructField("run_id", T.StringType()))
     out_schema = T.StructType(fields)
-    if not values:
+    hs = _probe_hashes(values)
+    if hs is None:
         spark = pages.sparkSession
         return spark.createDataFrame([], out_schema)
-    import numbers
-    if all(isinstance(v, (str, bytes)) for v in values):
-        tag = "str"
-        probe = pa.array([v.decode() if isinstance(v, bytes) else v
-                          for v in values])
-    elif all(isinstance(v, numbers.Integral)      # incl. numpy integer
-             and not isinstance(v, (bool, np.bool_)) for v in values):
-        tag = "i64"
-        probe = pa.array([int(v) for v in values], pa.int64())
-    else:
-        raise TypeError(
-            "in_prune probes must be all-str/bytes or all-int, got "
-            f"{sorted({type(v).__name__ for v in values})}")
-    hs = _bloom_hashes(probe, tag)
-    h1s = [int(h) & 0xFFFFFFFF for h in hs]
-    h2s = [int(h) >> 32 for h in hs]
     rows = pages.filter((F.col("codec") == "__bloom__")
                         & (F.col("column") == column)) \
                 .select(*keys, "params", "data")
@@ -1337,31 +1692,10 @@ def in_prune(pages: DataFrame, column: str, values: list) -> DataFrame:
 
     def kernel(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            params = b.column("params").to_pylist()
-            ms = np.array([int(json.loads(p)["m"]) for p in params],
-                          np.int64)
-            dcol = b.column("data")
-            hit_idx = []
-            for m in np.unique(ms):
-                idx = np.nonzero(ms == m)[0]
-                nb = int(m) // 8
-                buf = np.concatenate(
-                    [np.frombuffer(dcol[int(i)].as_py(), np.uint8)
-                     for i in idx]).reshape(len(idx), nb)
-                any_ok = np.zeros(len(idx), dtype=bool)
-                for h1, h2 in zip(h1s, h2s):
-                    ok = np.ones(len(idx), dtype=bool)
-                    for ki in range(_BLOOM_K):
-                        p = (h1 + ki * h2) % int(m)
-                        ok &= (buf[:, p // 8] >> (p % 8)) & 1 == 1
-                    any_ok |= ok
-                hit_idx.append(idx[any_ok])
-            sel = (np.sort(np.concatenate(hit_idx)) if hit_idx
-                   else np.empty(0, np.int64))
-            taken = b.take(pa.array(sel, pa.int64()))
+            taken = b.filter(pa.array(_bloom_maybe(
+                b.column("params").to_pylist(), b.column("data"), hs)))
             out = {"part_id": taken.column("part_id").cast(pa.int32())}
             if len(keys) == 2:
                 out["run_id"] = taken.column("run_id")
@@ -1382,50 +1716,60 @@ def in_prune(pages: DataFrame, column: str, values: list) -> DataFrame:
 _MAX_LITERAL_PRUNE = 32768
 
 
-def _keep_parts(pages: DataFrame, survivors: DataFrame,
+def _keep_parts(pages: DataFrame, survivors,
                 keys: list[str]) -> DataFrame:
-    """pages restricted to the survivor (part_id[, run_id]) set.
+    """pages restricted to the survivor (part_id[, run_id]) set: a set of
+    key tuples, or a metadata-sized DataFrame (one row per surviving
+    part) collected here.
 
-    Exactness always comes from the broadcast semi join; when the
-    survivor set is small enough to collect (it is metadata-sized — one
-    row per surviving part), a literal ``part_id IN (...)`` filter is
-    applied FIRST so the parquet reader prunes row groups before the
-    blob column is ever materialized."""
-    # one materialization either way: the prune subquery (bloom/zone
-    # kernels) runs once into a local checkpoint; both the literal
-    # collect and the >cap join fallback read the checkpointed rows
-    survivors = survivors.localCheckpoint(eager=False)
-    rows = survivors.limit(_MAX_LITERAL_PRUNE + 1).collect()
-    if len(rows) > _MAX_LITERAL_PRUNE:
-        return pages.join(F.broadcast(survivors), keys, "left_semi")
-    pids = sorted({r["part_id"] for r in rows})
-    if not pids:
+    With run ids the cut starts with a literal ``run_id IN (...)``: on
+    the run-partitioned pages that prunes whole run directories. Up to
+    ``_MAX_LITERAL_PRUNE`` survivors the rest is a literal
+    ``part_id IN (...)``, which the parquet reader pushes down to prune
+    row groups before the blob column is materialized, plus the exact
+    pair predicate; above it a broadcast semi join against a local frame
+    of the survivors. Filters are SQL text: one py4j call, where a
+    Column per literal costs several."""
+    if isinstance(survivors, DataFrame):
+        survivors = {tuple(r) for r in survivors.select(*keys).collect()}
+    rows = sorted(survivors)
+    if not rows:
         return pages.limit(0)
-    pre = pages.filter(F.col("part_id").isin(pids))
-    if len(keys) == 1:
-        return pre              # literal filter IS the exact predicate
-    pairs = [f"{r['part_id']}\x1f{r['run_id']}" for r in rows]
-    return pre.filter(F.concat_ws("\x1f", F.col("part_id").cast("string"),
-                                  F.col("run_id")).isin(pairs))
+    cut = []
+    if len(keys) == 2:
+        runs = ", ".join(_sql_str(r) for r in sorted({r for _, r in rows}))
+        cut.append(f"run_id IN ({runs})")
+    if len(rows) > _MAX_LITERAL_PRUNE:
+        schema = ("part_id int, run_id string" if len(keys) == 2
+                  else "part_id int")
+        local = pages.sparkSession.createDataFrame(rows, schema)
+        if cut:
+            pages = pages.filter(cut[0])
+        return pages.join(F.broadcast(local), keys, "left_semi")
+    cut.append(f"part_id IN ({', '.join(str(p) for p in sorted({r[0] for r in rows}))})")
+    if len(keys) == 2:
+        pairs = ", ".join(f"({p}, {_sql_str(r)})" for p, r in rows)
+        cut.append(f"(part_id, run_id) IN ({pairs})")
+    return pages.filter(" AND ".join(cut))
+
+
+def _sql_str(v: str) -> str:
+    """A Spark SQL string literal of ``v``."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def decode_where_in(pages: DataFrame, column: str, values: list,
                     spark: SparkSession | None = None) -> DataFrame:
-    """Batched point-lookup decode: one bloom scan for the whole IN list,
-    decode the surviving parts once, exact residual filter.
+    """Batched point-lookup decode: one bloom probe for the whole IN
+    list, decode the surviving parts once, exact residual filter.
 
-    Falls back to a full decode when the column carries no bloom rows
-    (not in ``bloom_cols`` at encode time) — an absent index must mean
-    "scan", never "empty result"."""
-    cols_hint = getattr(pages, "_cps_columns", None)
-    if cols_hint is None:
-        # discover the layout from the FULL pages BEFORE pruning — with
-        # an empty prune result (absent key) discovery on the survivor
-        # set would yield a zero-column schema and an unresolvable filter
-        meta = (pages.filter(F.col("col_idx") >= 0)
-                .select("column", "col_idx", "type")
-                .distinct().orderBy("col_idx").collect())
-        cols_hint = [(r["column"], r["type"]) for r in meta]
+    On a durable read's frame (``read_live_pages``) the probe runs on
+    the driver against its snapshot, which then also holds the probed
+    column's bloom rows (one per indexed part), and planning runs no
+    Spark job. Falls back to a full decode when the column carries no
+    bloom rows (not in ``bloom_cols`` at encode time) — an absent index
+    must mean "scan", never "empty result"."""
+    cols_hint = _column_layout(pages)
     if not values:
         return decode_table(pages.limit(0), spark, columns=cols_hint)
     keys = (["part_id", "run_id"] if "run_id" in pages.columns
@@ -1468,17 +1812,22 @@ def _read_deletes(spark: SparkSession, dst: str) -> DataFrame | None:
     d = os.path.join(dst, "deletes")
     if not _exists(spark, d):
         return None
-    return spark.read.parquet(d)
+    return spark.read.schema(DELETES_SCHEMA).parquet(d)
 
 
 def _bloom_candidate_parts(pages: DataFrame, column: str, values: list,
-                           keys: list[str]) -> DataFrame | None:
+                           keys: list[str]) -> "set | DataFrame | None":
     """Shared absence-means-scan candidate discovery (decode_where_in /
     delete_where_in / update_where): bloom MAYBE-hit parts UNION every
     part carrying no bloom row for the column — at (part_id, run_id)
     granularity when available, since appended runs reuse the hash
     part-id space. Returns None when the column has no bloom rows at
-    all (callers must scan everything rather than prune)."""
+    all (callers must scan everything rather than prune). A frame with
+    a snapshot answers on the driver (a set of pairs); any other frame
+    gets a lazy DataFrame. ``_keep_parts`` takes either."""
+    snap = getattr(pages, "_cps_snapshot", None)
+    if snap is not None:
+        return snap.bloom_pairs(column, values)
     bloom_rows = pages.filter((F.col("codec") == "__bloom__")
                               & (F.col("column") == column))
     if not bool(bloom_rows.limit(1).take(1)):
@@ -1577,7 +1926,7 @@ def delete_where_in(spark: SparkSession, dst: str, column: str,
     hot = pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
     surv = _bloom_candidate_parts(pages, column, values, keys)
     if surv is not None:
-        hot = hot.join(F.broadcast(surv), keys, "left_semi")
+        hot = _keep_parts(hot, surv, keys)
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -1607,8 +1956,13 @@ def delete_where_range(spark: SparkSession, dst: str, column: str,
     pages = read_committed_pages(spark, dst)
     hot = pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
     tag = _column_tag(pages, column, None)
-    surv = prune_parts(pages, column, lo=lo, hi=hi, tag=tag)
-    hot = hot.join(F.broadcast(surv), ["part_id"], "left_semi")
+    snap = getattr(pages, "_cps_snapshot", None)
+    if snap is not None:
+        hot = _keep_parts(hot, snap.zone_pairs(column, lo, hi, tag),
+                          ["part_id", "run_id"])
+    else:
+        surv = prune_parts(pages, column, lo=lo, hi=hi, tag=tag)
+        hot = hot.join(F.broadcast(surv), ["part_id"], "left_semi")
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -1633,23 +1987,14 @@ def _deletes_as_page_rows(dels: DataFrame) -> DataFrame:
     """Deletion sidecars -> pages-schema rows (codec __delete__, run_id =
     the TARGET run) so they ride every part-grained pruning join into
     decode_table, which applies them."""
-    return dels.select(
-        F.lit("").alias("table"),
-        F.col("part_id").cast("int").alias("part_id"),
-        F.lit(DELETE_CODEC).alias("column"),
-        F.lit(-1).cast("int").alias("col_idx"),
-        F.lit(0).cast("int").alias("page_id"),
-        F.lit(DELETE_CODEC).alias("codec"),
-        F.lit("bin").alias("type"),
-        F.lit("{}").alias("params"),
-        F.col("bitmap").alias("data"),
-        F.col("n_rows").cast("long").alias("num_values"),
-        F.col("n_del").cast("long").alias("null_count"),
-        F.lit(0).cast("long").alias("raw_bytes"),
-        F.octet_length("bitmap").cast("long").alias("enc_bytes"),
-        F.lit(None).cast("string").alias("min_v"),
-        F.lit(None).cast("string").alias("max_v"),
-        F.col("run_id"))
+    return dels.selectExpr(
+        "'' AS `table`", "part_id", f"'{DELETE_CODEC}' AS `column`",
+        "-1 AS col_idx", "0 AS page_id", f"'{DELETE_CODEC}' AS codec",
+        "'bin' AS type", "'{}' AS params", "bitmap AS data",
+        "n_rows AS num_values", "n_del AS null_count", "0L AS raw_bytes",
+        "CAST(octet_length(bitmap) AS BIGINT) AS enc_bytes",
+        "CAST(NULL AS STRING) AS min_v", "CAST(NULL AS STRING) AS max_v",
+        "run_id")
 
 
 def read_live_pages(spark: SparkSession, dst: str, as_of=None) -> DataFrame:
@@ -1657,12 +2002,27 @@ def read_live_pages(spark: SparkSession, dst: str, as_of=None) -> DataFrame:
     decodes that must honor row-level deletes. Sidecars for superseded
     parts drop out via the same live-manifest semi join as pages.
     ``as_of`` (datetime/ISO string) gives a time-travel snapshot:
-    manifest rows AND delete sidecars created later are excluded."""
+    manifest rows AND delete sidecars created later are excluded.
+
+    A local dataset is planned on the driver: one ``_Snapshot`` (manifest,
+    delete index and the pages' metadata columns, read with
+    pyarrow.dataset) fixes the live (part_id, run_id) set, and the frame
+    is built from it with explicit-schema reads and literal filters — no
+    Spark job runs until the frame does. The snapshot rides on the frame
+    (``_cps_snapshot``, with the layout in ``_cps_columns``) so that
+    decode_where / decode_where_in prune on the driver too. Driver
+    memory: one metadata row per live page, plus the manifest and the
+    delete index (one row per part); a bloom probe adds the probed
+    column's bloom rows. A frame derived from this one (filtered,
+    joined) loses the snapshot and plans with Spark jobs."""
+    snap = _Snapshot.read(spark, dst, as_of)
+    if snap is not None:
+        return snap.frame(spark)
     pages = read_committed_pages(spark, dst, as_of=as_of)
     dels = _read_deletes(spark, dst)
     if dels is None:
         return pages
-    if as_of is not None and "created_at" in dels.columns:
+    if as_of is not None:
         dels = dels.filter(
             F.col("created_at") <= F.lit(as_of).cast("timestamp"))
     mani = _read_manifest(spark, dst)
@@ -1705,7 +2065,7 @@ def table_changes(spark: SparkSession, dst: str, from_ts,
     candA = liveA.join(liveB, ["part_id", "run_id"], "left_anti")
     candB = liveB.join(liveA, ["part_id", "run_id"], "left_anti")
     dels = _read_deletes(spark, dst)
-    if dels is not None and "created_at" in dels.columns:
+    if dels is not None:
         # vectors written inside the window change a part's VISIBLE rows
         # without touching the manifest: decode those parts on both sides
         w = dels.filter(
@@ -1724,16 +2084,9 @@ def table_changes(spark: SparkSession, dst: str, from_ts,
     # inside the window diffs cleanly (a column added by a later run is
     # NULL on the A side) and an all-empty candidate set still yields a
     # typed empty frame instead of a zero-column one
-    meta = (pagesA.select("column", "col_idx", "type")
-            .unionByName(pagesB.select("column", "col_idx", "type"))
-            .filter(F.col("col_idx") >= 0)
-            .distinct().orderBy("col_idx").collect())
-    seen: set = set()
-    hint = []
-    for r in meta:
-        if r["column"] not in seen:
-            seen.add(r["column"])
-            hint.append((r["column"], r["type"]))
+    hint = _column_layout(pagesA.select("column", "col_idx", "type")
+                          .unionByName(pagesB.select("column", "col_idx",
+                                                     "type")))
     dfA = decode_table(
         pagesA.join(F.broadcast(candA), ["part_id", "run_id"],
                     "left_semi"), spark, columns=hint)
@@ -2209,13 +2562,14 @@ def update_where(spark: SparkSession, dst: str, column: str, values: list,
     # must not count rows already deleted (decode_table applies them)
     pages = read_live_pages(spark, dst)
     keys = ["part_id", "run_id"]
-    allp = (pages.filter((F.col("column") == column)
+    allp = {tuple(r) for r in
+            pages.filter((F.col("column") == column)
                          & (F.col("col_idx") >= 0))
-            .select(*keys).distinct())
+            .select(*keys).distinct().collect()}
     surv = _bloom_candidate_parts(pages, column, values, keys)
-    cand = (allp if surv is None
-            else surv.join(allp, keys, "left_semi").distinct())
-    tpairs = [(r["part_id"], r["run_id"]) for r in cand.collect()]
+    if isinstance(surv, DataFrame):
+        surv = {tuple(r) for r in surv.collect()}
+    tpairs = sorted(allp if surv is None else surv & allp)
     if not tpairs:
         return {"parts_rewritten": 0, "rows_updated": 0, "rows": 0,
                 "run_id": None}
@@ -2261,27 +2615,25 @@ def vacuum(spark: SparkSession, dst: str,
     m = _read_manifest(spark, dst)
     cutoff = (datetime.datetime.now()
               - datetime.timedelta(hours=retain_hours))
-    per_run = []
-    if "replaces" in m.columns:
-        # (part, run) -> earliest supersession commit time
-        tomb = (m.filter(F.col("replaces").isNotNull())
-                .select(F.explode("replaces").alias("t"), "committed_at")
-                .select(F.col("t.part_id").alias("part_id"),
-                        F.col("t.run_id").alias("run_id"),
-                        F.col("committed_at").alias("superseded_at"))
-                .groupBy("part_id", "run_id")
-                .agg(F.min("superseded_at").alias("superseded_at")))
-        per_run = (m.select("part_id", "run_id", "enc_bytes")
-                   .join(tomb, ["part_id", "run_id"], "left")
-                   .groupBy("run_id")
-                   .agg(F.count("*").alias("parts"),
-                        F.count("superseded_at").alias("superseded"),
-                        F.max("superseded_at").alias("last_superseded_at"),
-                        F.sum("enc_bytes").alias("enc_bytes"))
-                   .filter((F.col("parts") == F.col("superseded"))
-                           & (F.col("last_superseded_at")
-                              <= F.lit(cutoff).cast("timestamp")))
-                   .collect())
+    # (part, run) -> earliest supersession commit time
+    tomb = (m.filter(F.col("replaces").isNotNull())
+            .select(F.explode("replaces").alias("t"), "committed_at")
+            .select(F.col("t.part_id").alias("part_id"),
+                    F.col("t.run_id").alias("run_id"),
+                    F.col("committed_at").alias("superseded_at"))
+            .groupBy("part_id", "run_id")
+            .agg(F.min("superseded_at").alias("superseded_at")))
+    per_run = (m.select("part_id", "run_id", "enc_bytes")
+               .join(tomb, ["part_id", "run_id"], "left")
+               .groupBy("run_id")
+               .agg(F.count("*").alias("parts"),
+                    F.count("superseded_at").alias("superseded"),
+                    F.max("superseded_at").alias("last_superseded_at"),
+                    F.sum("enc_bytes").alias("enc_bytes"))
+               .filter((F.col("parts") == F.col("superseded"))
+                       & (F.col("last_superseded_at")
+                          <= F.lit(cutoff).cast("timestamp")))
+               .collect())
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     removed, freed = [], 0

@@ -278,30 +278,31 @@ def _interleave(arr: pa.Array) -> bytes:
     return out.tobytes()
 
 
-def _deinterleave(data: bytes, n: int) -> pa.Array:
-    """Format PLAIN ``(u32 len, bytes)*`` -> string array, via a length
-    walk (the lengths chain, so this loop is over VALUES of one page —
-    acceptable for conformance reads; the engine's own pages never use
-    the interleaved form)."""
+def _deinterleave(data: bytes, n: int, utf8: bool = True) -> pa.Array:
+    """Format PLAIN ``(u32 len, bytes)*`` -> string (``utf8``) or binary
+    array, via a length walk (the lengths chain, so this loop is over
+    VALUES of one page — acceptable for conformance reads and the few
+    pages ``read_rows`` touches; the engine's page blobs never use the
+    interleaved form)."""
+    import struct
     buf = np.frombuffer(data, np.uint8)
     lens = np.empty(n, np.int64)
     pos = 0
     for i in range(n):
-        lens[i] = int(buf[pos:pos + 4].view(np.uint32)[0])
-        pos += 4 + lens[i]
+        lens[i] = struct.unpack_from("<I", data, pos)[0]
+        pos += 4 + int(lens[i])
     starts = np.zeros(n, np.int64)
     np.cumsum(lens[:-1] + 4, out=starts[1:])
-    starts += 4                                # skip each length prefix
     offs = np.zeros(n + 1, np.int64)
     np.cumsum(lens, out=offs[1:])
-    payload = np.empty(int(offs[-1]), np.uint8)
-    src = np.arange(payload.shape[0], dtype=np.int64) + \
-        np.repeat(starts - offs[:-1], lens)
-    payload[:] = buf[src]
-    return pa.LargeBinaryArray.from_buffers(
+    # the values are every byte of the walked span but the prefixes
+    keep = np.ones(pos, bool)
+    keep[(starts[:, None] + np.arange(4)).ravel()] = False
+    payload = buf[:pos][keep]
+    out = pa.LargeBinaryArray.from_buffers(
         pa.large_binary(), n,
-        [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(payload.tobytes())],
-    ).cast(pa.large_string())
+        [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(payload.tobytes())])
+    return out.cast(pa.large_string()) if utf8 else out
 
 
 # --- writer --------------------------------------------------------------------
@@ -1496,9 +1497,9 @@ def _apply_converted(col: pa.Array, el: dict) -> pa.Array:
 
 
 def _decode_plain(payload: bytes, k: int, ptype: int,
-                  tlen: int = 0) -> pa.Array:
+                  tlen: int = 0, utf8: bool = True) -> pa.Array:
     if ptype == T_BYTE_ARRAY:
-        return _deinterleave(payload, k)
+        return _deinterleave(payload, k, utf8)
     if ptype == T_BOOLEAN:
         return pa.array(plain.decode_bool(payload, k))
     if ptype == T_FLBA:
@@ -1848,6 +1849,86 @@ def read_page_index(path: str) -> dict[str, dict]:
     return out
 
 
+def _dictionary_page(buf, off: int, elm: dict, dcodec, utf8: bool):
+    """The values of the dictionary page at ``off``."""
+    r = _CR(buf, off)
+    ph = r.struct()
+    payload = buf[r.pos:r.pos + ph[3]]
+    if dcodec is not None:
+        payload = dcodec.decompress(payload, decompressed_size=ph[2],
+                                    asbytes=True)
+    return _decode_plain(payload, ph[7][1], elm[1], elm.get(2, 0), utf8)
+
+
+def _decode_data_page(buf, off: int, elm: dict, uniq, dcodec,
+                      utf8: bool = True) -> pa.Array:
+    """One v1/v2 data page of a flat required/optional column -> its
+    values, nulls preserved: PLAIN, dictionary and the DELTA/BSS
+    encodings."""
+    ptype = elm[1]
+    optional = elm.get(3, 0) == REP_OPTIONAL
+    r = _CR(buf, off)
+    ph = r.struct()
+    payload = buf[r.pos:r.pos + ph[3]]
+    if dcodec is not None and ph[1] != PAGE_DATA_V2:
+        payload = dcodec.decompress(payload, decompressed_size=ph[2],
+                                    asbytes=True)
+    if ph[1] == PAGE_DATA:
+        dp = ph[5]
+        nv, enc = dp[1], dp[2]
+        if optional:
+            dlen = int(np.frombuffer(payload[:4], np.uint32)[0])
+            levels = rle.decode(payload[4:4 + dlen], {"bw": 1}, nv)
+            valid = levels.astype(bool)
+            payload = payload[4 + dlen:]
+        else:
+            valid = np.ones(nv, bool)
+    elif ph[1] == PAGE_DATA_V2:
+        dp = ph[8]
+        nv, enc = dp[1], dp[4]
+        rlen, dlen = dp.get(6, 0), dp.get(5, 0)
+        if dlen:
+            levels = rle.decode(payload[rlen:rlen + dlen], {"bw": 1}, nv)
+            valid = levels.astype(bool)
+        else:
+            valid = np.ones(nv, bool)
+        payload = payload[rlen + dlen:]
+        if dcodec is not None and dp.get(7, True):
+            payload = dcodec.decompress(
+                payload, decompressed_size=ph[2] - rlen - dlen,
+                asbytes=True)
+    else:
+        raise ValueError("unexpected page type in OffsetIndex")
+    k = int(valid.sum())
+    if enc in (ENC_PLAIN_DICTIONARY, ENC_RLE_DICTIONARY):
+        bw = payload[0]
+        codes = rle.decode(payload[1:], {"bw": int(bw)}, k)
+        vals = uniq.take(pa.array(codes.astype(np.int64)))
+    elif enc == ENC_PLAIN:
+        vals = _decode_plain(payload, k, ptype, elm.get(2, 0), utf8)
+    elif enc == ENC_DELTA_LENGTH_BA:
+        vals = deltafmt.dlba_decode(payload, k)
+    elif enc == ENC_DELTA_BINARY_PACKED:
+        v, _ = deltafmt.dbp_decode(
+            payload, 0, bits=32 if ptype == T_INT32 else 64)
+        if v.size != k:
+            raise ValueError(f"DBP count {v.size} != {k}")
+        vals = pa.array(v)
+    elif enc == ENC_DELTA_BA:
+        vals = deltafmt.dba_decode(payload, k)
+    elif enc == ENC_BYTE_STREAM_SPLIT:
+        dt = {T_FLOAT: np.float32, T_DOUBLE: np.float64}[ptype]
+        vals = pa.array(bss.unsplit_bytes(payload, k, dt))
+    else:
+        raise ValueError(f"encoding {enc} unsupported in pruned read")
+    if utf8 and pa.types.is_large_binary(vals.type):
+        vals = vals.cast(pa.large_string())
+    if k < nv:
+        ridx = np.cumsum(valid, dtype=np.int64) - 1
+        vals = vals.take(pa.array(ridx, mask=~valid))
+    return vals
+
+
 def read_column_pruned(path: str, column: str, lo, hi
                        ) -> tuple[pa.Array, int, int]:
     """Decode ONLY the pages of ``column`` whose ColumnIndex [min,max]
@@ -1873,7 +1954,6 @@ def read_column_pruned(path: str, column: str, lo, hi
     if elm is None:
         raise ValueError(f"{column!r} is not a flat column")
     ptype = elm[1]
-    optional = elm.get(3, 0) == REP_OPTIONAL
     # (page, dict) work list per ROW GROUP: each row group has its own
     # index pair and its own dictionary page
     work: list[tuple[int, "pa.Array | None"]] = []
@@ -1898,16 +1978,8 @@ def read_column_pruned(path: str, column: str, lo, hi
             maxs = [None if np_ else _plain_scalar(b, ptype)
                     for np_, b in zip(null_pages, ci[3])]
             n_pages_total += len(pages)
-            uniq = None
-            if 11 in cm:
-                r = _CR(buf, cm[11])
-                ph = r.struct()
-                payload = buf[r.pos:r.pos + ph[3]]
-                if dcodec is not None:
-                    payload = dcodec.decompress(
-                        payload, decompressed_size=ph[2], asbytes=True)
-                uniq = _decode_plain(payload, ph[7][1], ptype,
-                                     elm.get(2, 0))
+            uniq = (_dictionary_page(buf, cm[11], elm, dcodec, True)
+                    if 11 in cm else None)
             for i, (off, csize, first_row) in enumerate(pages):
                 if null_pages[i]:
                     continue
@@ -1915,69 +1987,71 @@ def read_column_pruned(path: str, column: str, lo, hi
                     work.append((off, uniq, dcodec))
     if not found:
         raise ValueError(f"column {column!r} not found")
-    got = []
-    for off, uniq, dcodec in work:
-        r = _CR(buf, off)
-        ph = r.struct()
-        payload = buf[r.pos:r.pos + ph[3]]
-        if dcodec is not None and ph[1] != PAGE_DATA_V2:
-            payload = dcodec.decompress(payload, decompressed_size=ph[2],
-                                        asbytes=True)
-        if ph[1] == PAGE_DATA:
-            dp = ph[5]
-            nv, enc = dp[1], dp[2]
-            if optional:
-                dlen = int(np.frombuffer(payload[:4], np.uint32)[0])
-                levels = rle.decode(payload[4:4 + dlen], {"bw": 1}, nv)
-                valid = levels.astype(bool)
-                payload = payload[4 + dlen:]
-            else:
-                valid = np.ones(nv, bool)
-        elif ph[1] == PAGE_DATA_V2:
-            dp = ph[8]
-            nv, enc = dp[1], dp[4]
-            rlen, dlen = dp.get(6, 0), dp.get(5, 0)
-            if dlen:
-                levels = rle.decode(payload[rlen:rlen + dlen], {"bw": 1}, nv)
-                valid = levels.astype(bool)
-            else:
-                valid = np.ones(nv, bool)
-            payload = payload[rlen + dlen:]
-            if dcodec is not None and dp.get(7, True):
-                payload = dcodec.decompress(
-                    payload, decompressed_size=ph[2] - rlen - dlen,
-                    asbytes=True)
-        else:
-            raise ValueError("unexpected page type in OffsetIndex")
-        k = int(valid.sum())
-        if enc in (ENC_PLAIN_DICTIONARY, ENC_RLE_DICTIONARY):
-            bw = payload[0]
-            codes = rle.decode(payload[1:], {"bw": int(bw)}, k)
-            vals = uniq.take(pa.array(codes.astype(np.int64)))
-        elif enc == ENC_PLAIN:
-            vals = _decode_plain(payload, k, ptype, elm.get(2, 0))
-        elif enc == ENC_DELTA_LENGTH_BA:
-            vals = deltafmt.dlba_decode(payload, k).cast(pa.large_string())
-        elif enc == ENC_DELTA_BINARY_PACKED:
-            v, _ = deltafmt.dbp_decode(
-                payload, 0, bits=32 if ptype == T_INT32 else 64)
-            if v.size != k:
-                raise ValueError(f"DBP count {v.size} != {k}")
-            vals = pa.array(v)
-        elif enc == ENC_DELTA_BA:
-            vals = deltafmt.dba_decode(payload, k).cast(pa.large_string())
-        elif enc == ENC_BYTE_STREAM_SPLIT:
-            dt = {T_FLOAT: np.float32, T_DOUBLE: np.float64}[ptype]
-            vals = pa.array(bss.unsplit_bytes(payload, k, dt))
-        else:
-            raise ValueError(f"encoding {enc} unsupported in pruned read")
-        if k < nv:
-            ridx = np.cumsum(valid, dtype=np.int64) - 1
-            vals = vals.take(pa.array(ridx, mask=~valid))
-        got.append(vals)
+    got = [_decode_data_page(buf, off, elm, uniq, dcodec)
+           for off, uniq, dcodec in work]
     if got:
         col = pa.concat_arrays([g.cast(got[0].type) for g in got])
     else:
         col = pa.array([], pa.int64() if ptype in (T_INT32, T_INT64)
                        else pa.large_string())
     return _apply_converted(col, elm), len(work), n_pages_total
+
+
+_PTYPE_OF = {"BOOLEAN": T_BOOLEAN, "INT32": T_INT32, "INT64": T_INT64,
+             "FLOAT": T_FLOAT, "DOUBLE": T_DOUBLE,
+             "BYTE_ARRAY": T_BYTE_ARRAY, "FIXED_LEN_BYTE_ARRAY": T_FLBA}
+
+
+def read_rows(path: str, column: str, rows) -> pa.Array:
+    """The physical values of flat ``column`` at file row indices
+    ``rows``, in ascending row order, decoding only the data pages that
+    hold them (and the chunk's dictionary page when one is needed): the
+    page headers are walked from the chunk start, and every other page
+    is skipped unread. The footer is parsed by pyarrow. BYTE_ARRAY
+    columns come back as strings when annotated UTF8, else binary."""
+    import pyarrow.parquet as pq
+    rows = np.unique(np.asarray(rows, np.int64))
+    md = pq.ParquetFile(path).metadata
+    paths = [md.schema.column(i).path for i in range(md.num_columns)]
+    if column not in paths:
+        raise ValueError(f"column {column!r} not found")
+    j = paths.index(column)
+    cs = md.schema.column(j)
+    if cs.max_repetition_level:
+        raise ValueError(f"{column!r} is not a flat column")
+    elm = {1: _PTYPE_OF[cs.physical_type], 2: cs.length or 0,
+           3: REP_OPTIONAL if cs.max_definition_level else REP_REQUIRED}
+    utf8 = cs.logical_type.type == "STRING" or cs.converted_type == "UTF8"
+    buf = _map_file(path)
+    got = []
+    base = 0
+    for i in range(md.num_row_groups):
+        n = md.row_group(i).num_rows
+        want = rows[(rows >= base) & (rows < base + n)] - base
+        base += n
+        if not want.size:
+            continue
+        cc = md.row_group(i).column(j)
+        dcodec = (None if cc.compression == "UNCOMPRESSED"
+                  else pa.Codec(cc.compression.lower()))
+        pos = (cc.dictionary_page_offset if cc.has_dictionary_page
+               else cc.data_page_offset)
+        end = pos + cc.total_compressed_size
+        first, uniq = 0, None
+        while pos < end and first <= want[-1]:
+            r = _CR(buf, pos)
+            ph = r.struct()
+            if ph[1] == PAGE_DICTIONARY:
+                uniq = _dictionary_page(buf, pos, elm, dcodec, utf8)
+            elif ph[1] in (PAGE_DATA, PAGE_DATA_V2):
+                nv = (ph[5] if ph[1] == PAGE_DATA else ph[8])[1]
+                hit = want[(want >= first) & (want < first + nv)]
+                if hit.size:
+                    vals = _decode_data_page(buf, pos, elm, uniq, dcodec,
+                                             utf8)
+                    got.append(vals.take(pa.array(hit - first)))
+                first += nv
+            pos = r.pos + ph[3]
+    if not got:
+        return pa.array([], pa.large_string() if utf8 else pa.large_binary())
+    return pa.concat_arrays(got)

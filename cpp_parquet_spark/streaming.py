@@ -24,7 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import run_encode
+from .engine import _read_manifest, run_encode
 from .partitioning import EncodeConfig
 
 
@@ -73,9 +73,8 @@ def stream_encode(spark: SparkSession, src_dir: str, schema, dst: str,
         # drops them; the replay guard matches on the epoch PREFIX.
         epoch_prefix = f"batch-{epoch_id}-"
         run_id = epoch_prefix + uuid.uuid4().hex[:8]
-        manifest_dir = os.path.join(dst, "manifest")
         try:
-            already = (ss.read.parquet(manifest_dir)
+            already = (_read_manifest(ss, dst)
                        .filter(F.col("run_id").startswith(epoch_prefix))
                        .limit(1).count())
         except Exception:

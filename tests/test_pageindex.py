@@ -237,3 +237,29 @@ def test_read_column_pruned_not_shadowed_by_nested_leaf(tmp_path):
     assert pages_total == 8 and pages_read < pages_total
     got = [x for x in vals.to_pylist() if x is not None and 50 <= x <= 99]
     assert got == list(range(50, 100))
+
+
+@pytest.mark.parametrize("dictionary", [False, True])
+def test_read_rows_decodes_only_the_pages_holding_them(tmp_path, dictionary):
+    """interop.read_rows: the values at chosen file rows, across row
+    groups and pages, binary blobs (not UTF8) and nullable strings, with
+    and without dictionary pages — equal to pyarrow's own read."""
+    rng = np.random.RandomState(5)
+    n = 6000
+    blobs = [bytes(rng.randint(0, 256, rng.randint(0, 40), np.uint8))
+             for _ in range(n)]
+    txt = [None if i % 7 == 0 else f"t{i % 50}" for i in range(n)]
+    tbl = pa.table({"b": pa.array(blobs, pa.binary()),
+                    "s": pa.array(txt, pa.string())})
+    p = str(tmp_path / "rows.parquet")
+    pq.write_table(tbl, p, compression="snappy", use_dictionary=dictionary,
+                   data_page_size=2048, row_group_size=2500,
+                   write_page_index=True)
+    assert len(interop.read_page_index(p)["b"]["pages"]) > 6
+    rows = np.sort(rng.choice(n, 40, replace=False))
+    for col in ("b", "s"):
+        got = interop.read_rows(p, col, rows)
+        want = tbl.column(col).take(pa.array(rows))
+        assert got.to_pylist() == want.to_pylist()
+    assert pa.types.is_large_binary(interop.read_rows(p, "b", rows[:1]).type)
+    assert interop.read_rows(p, "b", []).to_pylist() == []

@@ -157,10 +157,13 @@ def test_pushdown_decode_part_filter_reaches_parquet(spark, sf_dir,
     assert any("In(part_id" in seg for seg in pushed), plan
 
 
-def test_delete_and_snapshot_paths_stay_broadcast(spark, sf_dir, tmp_path):
+def test_delete_and_snapshot_paths_stay_broadcast(spark, sf_dir, tmp_path,
+                                                  monkeypatch):
     """Deletion-vector reads keep the 100 TB shape: survivors and
-    sidecars attach via broadcast joins — no full-data exchange enters
+    sidecars attach via literal filters planned on the driver, or via
+    broadcast joins above the literal cap — no full-data exchange enters
     the decode or scan plan because deletes exist."""
+    from cpp_parquet_spark import engine
     from cpp_parquet_spark.engine import (decode_dataset, delete_where_in,
                                           read_live_pages, run_encode,
                                           scan_column)
@@ -174,11 +177,22 @@ def test_delete_and_snapshot_paths_stay_broadcast(spark, sf_dir, tmp_path):
     delete_where_in(spark, dst, "doc_id", [1, 2])
     dec = decode_dataset(spark, dst)
     plan = _plan(dec)
-    # the live-manifest and delete-sidecar attachments broadcast; the
-    # only exchange is the groupBy(part_id) reassembly shuffle
+    # the live (part_id, run_id) cut of pages and delete sidecars is a
+    # literal filter: no join at all, and the only exchange is the
+    # groupBy(part_id) reassembly shuffle
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert plan.count("Exchange(") + plan.count("Exchange hashpartitioning") \
+        == 1, plan
+    # above the literal cap the cuts are broadcast semi joins, same rows
+    monkeypatch.setattr(engine, "_MAX_LITERAL_PRUNE", 0)
+    capped = decode_dataset(spark, dst)
+    plan = _plan(capped)
     assert "BroadcastExchange" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
     assert plan.count("Exchange(") + plan.count("Exchange hashpartitioning") \
         <= 2, plan
+    assert sorted(map(tuple, capped.collect())) == \
+        sorted(map(tuple, dec.collect()))
     sc = scan_column(read_live_pages(spark, dst), "doc_id", lo=0, hi=50)
     plan2 = _plan(sc)
     # bitmap/offset aux join must be broadcast, never a sort-merge join
