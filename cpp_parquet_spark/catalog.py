@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import (_read_deletes, _read_manifest, live_manifest,
+from .engine import (_Snapshot, _read_deletes, _read_manifest,
                      read_committed_pages)
 
 
@@ -73,14 +73,13 @@ def describe_dataset(spark: SparkSession, dst: str) -> DataFrame:
 def dataset_summary(spark: SparkSession, dst: str) -> dict:
     """One driver-side dict: live parts/rows/bytes, runs, delete
     sidecar counts — the health line a scheduler would log."""
-    live = live_manifest(_read_manifest(spark, dst))
-    agg = live.agg(F.count("*").alias("parts"),
-                   F.countDistinct("run_id").alias("runs"),
-                   F.sum("num_rows").alias("rows"),
-                   F.sum("raw_bytes").alias("raw_bytes"),
-                   F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
-    out = {k: (int(agg[k]) if agg[k] is not None else 0)
-           for k in ("parts", "runs", "rows", "raw_bytes", "enc_bytes")}
+    import pyarrow.compute as pc
+    live = _Snapshot.read(spark, dst, deletes=False).manifest
+    out = {"parts": live.num_rows,
+           "runs": pc.count_distinct(live["run_id"]).as_py(),
+           "rows": pc.sum(live["num_rows"]).as_py() or 0,
+           **{k: pc.sum(live[k]).as_py() or 0
+              for k in ("raw_bytes", "enc_bytes")}}
     dels = _read_deletes(spark, dst)
     out["delete_sidecars"] = int(dels.count()) if dels is not None else 0
     if dels is not None:

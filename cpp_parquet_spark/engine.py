@@ -19,6 +19,7 @@ from a crashed run are ignored by readers because a read keeps only the
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -777,34 +778,28 @@ def _first_by_name(layout) -> list[tuple[str, str]]:
 def _column_layout(pages: DataFrame) -> list[tuple[str, str]]:
     """The table's columns [(name, tag), ...] in col_idx order: the
     layout the frame carries (``encode_table`` output, a durable read's
-    snapshot), else one distinct scan over the FULL pages — discovery on
-    a pruned frame could see no part and yield a zero-column schema."""
+    snapshot), else its snapshot's — taken over the FULL frame, as
+    discovery on a pruned frame could see no part and yield a
+    zero-column schema."""
     hint = getattr(pages, "_cps_columns", None)
-    if hint is not None:
-        return hint
-    meta = (pages.filter(F.col("col_idx") >= 0)
-            .select("column", "col_idx", "type")
-            .distinct().orderBy("col_idx", "column").collect())
-    return _first_by_name((r["column"], r["type"]) for r in meta)
+    return hint if hint is not None else _snapshot_of(pages).layout()
 
 
 def _column_tag(pages: DataFrame, column: str,
                 columns: list[tuple[str, str]] | None) -> str | None:
-    hint = dict(columns or getattr(pages, "_cps_columns", None) or [])
-    if column in hint:
-        return hint[column]
-    r = (pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
-              .select("type").first())
-    return r["type"] if r else None
+    tags = dict(columns or ())
+    if column not in tags:
+        tags = dict(_column_layout(pages))
+    return tags.get(column)
 
 
 def prune_parts(pages: DataFrame, column: str, lo=None, hi=None,
                 tag: str | None = None) -> DataFrame:
-    """part_ids whose zone maps for ``column`` may intersect [lo, hi].
-
-    The scan touches only page metadata — Catalyst prunes the ``data``
-    blob column (the analogue of parquet footer/row-group statistics
-    pruning, parquet.thrift:882-889). Conservative by construction: a
+    """part_ids whose zone maps for ``column`` may intersect [lo, hi], as
+    a local DataFrame planned on the driver from the frame's snapshot
+    (``_Snapshot.zone_pairs``), which reads page metadata only — the
+    analogue of parquet footer/row-group statistics pruning
+    (parquet.thrift:882-889). Conservative by construction: a
     page with NULL min/max (binary/list column, all-null page, long
     string, NaN float) keeps its part. ``lo``/``hi`` use the zone text
     domain: numbers for numeric columns, epoch MICROseconds for
@@ -812,21 +807,10 @@ def prune_parts(pages: DataFrame, column: str, lo=None, hi=None,
     decimal values (str/Decimal/number, e.g. "123.45") for decimal
     columns — round 4: decimal zones prune in the decimal(38, s)
     domain instead of the old never-prunes NULL zones."""
-    tag = tag or _column_tag(pages, column, None)
-    cast = _zone_cast(tag)
-    mn = F.col("min_v").cast(cast) if cast else F.col("min_v")
-    mx = F.col("max_v").cast(cast) if cast else F.col("max_v")
-    zones = (pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
-                  .select("part_id", mn.alias("mn"), mx.alias("mx")))
-    keep = F.lit(True)
-    if lo is not None:
-        keep = keep & F.coalesce(F.col("mx") >= _zone_lit(lo, cast),
-                                 F.lit(True))
-    if hi is not None:
-        keep = keep & F.coalesce(F.col("mn") <= _zone_lit(hi, cast),
-                                 F.lit(True))
-    # a part survives when ANY of its pages may intersect
-    return zones.filter(keep).select("part_id").distinct()
+    pairs = _snapshot_of(pages).zone_pairs(
+        column, lo, hi, tag or _column_tag(pages, column, None))
+    return _pairs_frame(pages.sparkSession, {p[:1] for p in pairs},
+                        ["part_id"])
 
 
 def decode_where(pages: DataFrame, column: str, lo=None, hi=None,
@@ -838,32 +822,21 @@ def decode_where(pages: DataFrame, column: str, lo=None, hi=None,
 
     Parts (not pages) are the pruning unit because page cuts are
     per-column independent — dropping one column's page would misalign
-    row reassembly across columns. A durable read's frame
-    (``read_live_pages``) prunes (part_id, run_id)s on the driver from
-    its snapshot's zone maps and runs no Spark job to plan; any other
-    frame prunes with ``prune_parts``, one metadata-only Spark job whose
-    survivors come to the driver.
+    row reassembly across columns. The (part_id, run_id)s are pruned on
+    the driver from the frame's snapshot (``_snapshot_of``): a durable
+    read's frame (``read_live_pages``) plans with no Spark job, any
+    other frame with one collect of its metadata rows.
 
     ``more``: extra conjunctive predicates [(column, lo, hi), ...] —
     each prunes independently and the surviving-part sets intersect
     (AND semantics), then every residual filter applies post-decode."""
+    snap = _snapshot_of(pages)
     cols_hint = columns or _column_layout(pages)
     preds = [(column, lo, hi)] + list(more or [])
-    snap = getattr(pages, "_cps_snapshot", None)
-    if snap is not None:
-        keys = ["part_id", "run_id"]
-        parts = set.intersection(*[
-            snap.zone_pairs(col, plo, phi, _column_tag(pages, col, cols_hint))
-            for col, plo, phi in preds])
-    else:
-        keys = ["part_id"]
-        parts = None
-        for col, plo, phi in preds:
-            p = prune_parts(pages, col, plo, phi,
-                            tag=_column_tag(pages, col, cols_hint))
-            parts = (p if parts is None
-                     else parts.join(p, "part_id", "left_semi"))
-    pruned = _keep_parts(pages, parts, keys)
+    parts = set.intersection(*[
+        snap.zone_pairs(col, plo, phi, _column_tag(pages, col, cols_hint))
+        for col, plo, phi in preds])
+    pruned = _keep_parts(pages, parts, snap.keys)
     out = decode_table(pruned, spark, columns=cols_hint)
     for col, plo, phi in preds:
         tag = _column_tag(pages, col, cols_hint)
@@ -911,12 +884,11 @@ def scan_column(pages: DataFrame, column: str, lo=None, hi=None,
     # (part, run) bitmap. The bitmap + page row-offset attach via a
     # BROADCAST join (both metadata-sized), so the blob stream still
     # never shuffles; absent deletes, the plan is unchanged.
-    del_rows = pages.filter(F.col("codec") == DELETE_CODEC)
-    has_dels = bool(del_rows.limit(1).take(1))
+    has_dels = bool(_snapshot_of(pages).del_pairs)
     if has_dels:
         from pyspark.sql.window import Window
-        pkeys = (["part_id", "run_id"] if "run_id" in pages.columns
-                 else ["part_id"])
+        del_rows = pages.filter(F.col("codec") == DELETE_CODEC)
+        pkeys = _pair_keys(pages)
         base = pages.filter((F.col("column") == column)
                             & (F.col("col_idx") >= 0))
         w = Window.partitionBy(*pkeys).orderBy("page_id") \
@@ -1103,14 +1075,12 @@ def run_encode(spark: SparkSession, df: DataFrame, dst: str,
     manifest.write.mode("append").parquet(manifest_dir)
     # totals over LIVE rows only, so compaction-superseded parts don't
     # double-count
-    mrows = live_manifest(_read_manifest(spark, dst))
-    summary = (mrows.agg(F.count("*").alias("parts"),
-                         F.sum("num_rows").alias("rows"),
-                         F.sum("raw_bytes").alias("raw_bytes"),
-                         F.sum("enc_bytes").alias("enc_bytes")).collect()[0])
-    out = {"run_id": run_id, "parts": summary["parts"],
-           "rows": summary["rows"], "raw_bytes": summary["raw_bytes"],
-           "enc_bytes": summary["enc_bytes"]}
+    import pyarrow.compute as pc
+    live = _Snapshot.read(spark, dst, deletes=False).manifest
+    out = {"run_id": run_id, "parts": live.num_rows,
+           "rows": pc.sum(live["num_rows"]).as_py(),
+           "raw_bytes": pc.sum(live["raw_bytes"]).as_py(),
+           "enc_bytes": pc.sum(live["enc_bytes"]).as_py()}
     _write_run_sidecar(df, dst, cfg, run_id, resume, out)
     return out
 
@@ -1127,36 +1097,14 @@ def _read_manifest(spark: SparkSession, dst: str) -> DataFrame:
             .parquet(os.path.join(dst, "manifest")))
 
 
-def live_manifest(manifest: DataFrame) -> DataFrame:
-    """Drop manifest rows superseded by compaction: any (part_id, run_id)
-    named in some row's ``replaces`` list is dead. The tombstones travel
-    INSIDE the compaction run's own manifest rows, so supersede + commit
-    are one parquet append — no window where both or neither copy of the
-    data is visible."""
-    tomb = (manifest.filter(F.col("replaces").isNotNull())
-            .select(F.explode("replaces").alias("t"))
-            .select(F.col("t.part_id").alias("part_id"),
-                    F.col("t.run_id").alias("run_id")).distinct())
-    return manifest.join(F.broadcast(tomb), ["part_id", "run_id"],
-                         "left_anti")
-
-
-def _manifest_cutoff(manifest: DataFrame, as_of) -> DataFrame:
-    """Time travel: restrict the manifest to rows committed at or before
-    ``as_of`` (datetime or ISO string). Tombstones committed later are
-    excluded WITH their rows, so a snapshot taken before a compaction or
-    purge sees the original parts — page files are never deleted, only
-    superseded, which is what makes historical reads possible."""
-    return manifest.filter(
-        F.col("committed_at") <= F.lit(as_of).cast("timestamp"))
-
-
-# --- driver-side read planning ------------------------------------------------
+# --- read planning ------------------------------------------------------------
 #
-# A durable read plans from ONE metadata snapshot taken on the driver
-# with pyarrow, so building the frame runs no Spark job: each job costs
-# ~70-100 ms of scheduling whatever the data size, and a lookup planned
-# with Spark jobs launches 23 of them before its own frame runs.
+# Every pages frame plans from ONE metadata snapshot on the driver
+# (``_Snapshot``): the live set, the layout, zone and bloom survivors
+# are answered there, so building a read's frame runs no Spark job for
+# a local dataset: each job costs ~70-100 ms of scheduling whatever the
+# data size, and a lookup planned with Spark jobs launched 23 of them
+# before its own frame ran.
 
 #: the pages' small columns: everything a plan needs, never a page blob
 _META_COLS = ["part_id", "run_id", "column", "col_idx", "type", "codec",
@@ -1167,41 +1115,41 @@ _ARROW_PAIR = [("part_id", pa.int32()), ("run_id", pa.string())]
 
 def _local_root(dst: str) -> str | None:
     """Filesystem path of a local dataset, None for any other scheme
-    (those keep the Spark planning path)."""
+    (those take their metadata through Spark)."""
     if dst.startswith("file:"):
         from urllib.parse import urlparse
         return urlparse(dst).path
     return None if "://" in dst else dst
 
 
-def _as_of_micros(spark: SparkSession, as_of) -> int | None:
-    """``F.lit(as_of).cast("timestamp")`` as epoch microseconds, computed
-    on the driver: a naive datetime is local time (pyspark's own
-    conversion), a string or date without a zone is in the session time
-    zone. None when the form is not understood here (the caller then
-    plans with Spark, which applies its own cast)."""
+def _as_of_micros(spark: SparkSession, as_of) -> int:
+    """``F.lit(as_of).cast("timestamp")`` as epoch microseconds: on the
+    driver for a datetime (naive = local time, pyspark's own
+    conversion), a date or an ISO string (without a zone: the session
+    time zone); any other form takes Spark's own cast, one job."""
     import datetime as dt
     from zoneinfo import ZoneInfo
     try:
         tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
-        if isinstance(as_of, str):
-            as_of = dt.datetime.fromisoformat(as_of.strip())
-            if as_of.tzinfo is None:
-                as_of = as_of.replace(tzinfo=tz)
-        elif isinstance(as_of, dt.date) and not isinstance(as_of,
-                                                           dt.datetime):
-            as_of = dt.datetime.combine(as_of, dt.time(), tzinfo=tz)
-        if not isinstance(as_of, dt.datetime):
-            return None
-        return T.TimestampType().toInternal(as_of)
+        t = as_of
+        if isinstance(t, str):
+            t = dt.datetime.fromisoformat(t.strip())
+            if t.tzinfo is None:
+                t = t.replace(tzinfo=tz)
+        elif isinstance(t, dt.date) and not isinstance(t, dt.datetime):
+            t = dt.datetime.combine(t, dt.time(), tzinfo=tz)
+        if isinstance(t, dt.datetime):
+            return T.TimestampType().toInternal(t)
     except (ValueError, KeyError, OSError):
-        return None
+        pass
+    return spark.range(1).select(
+        F.unix_micros(F.lit(as_of).cast("timestamp"))).first()[0]
 
 
 def _zone_may_hit(mn, mx, lo, hi, conv) -> bool:
-    """``prune_parts``' keep predicate for one page, on the driver: the
-    page may hold a value in [lo, hi]. A NULL zone, or a bound that does
-    not compare in the zone's domain, keeps the page."""
+    """The zone keep predicate for one page: the page may hold a value
+    in [lo, hi]. A NULL zone, or a bound that does not compare in the
+    zone's domain, keeps the page."""
     try:
         if lo is not None and mx is not None and conv(mx) < lo:
             return False
@@ -1222,66 +1170,163 @@ def _zone_domain(cast: str | None):
     return int if cast == "long" else float
 
 
+def _meta_query(pages: DataFrame) -> DataFrame:
+    """A pages frame's metadata rows (``_META_COLS``): the parquet scan
+    under it never reads ``data``."""
+    return pages.select(*[c for c in _META_COLS if c in pages.columns])
+
+
+def _bloom_query(pages: DataFrame, column: str) -> DataFrame:
+    """``column``'s bloom rows with their ``params`` and ``data``: the
+    blob column is read only under the codec and column filter."""
+    return (pages.filter((F.col("codec") == "__bloom__")
+                         & (F.col("column") == column))
+            .select(*[c for c in _META_COLS if c in pages.columns],
+                    "params", "data"))
+
+
+def _pair_keys(pages: DataFrame) -> list[str]:
+    """The pruning unit of a pages frame: (part_id, run_id) when it has
+    run ids (appended runs reuse the hash part-id space), else part_id."""
+    return ["part_id", "run_id"] if "run_id" in pages.columns else ["part_id"]
+
+
 class _Snapshot:
-    """The plan input of one durable read, taken once on the driver.
+    """The plan input of a pages frame, taken once on the driver: the
+    live (part_id, run_id) set (``replaces`` tombstones and the ``as_of``
+    cut-off applied), the live manifest and delete rows that apply, and
+    the pages' metadata rows (``_META_COLS``, never a page blob). From
+    these it answers, without a Spark job: the column layout, zone-map
+    survivors and bloom survivors; ``frame`` turns a dataset's live set
+    into the pages DataFrame to decode. It is the only planner: every
+    pages frame carries one (``_cps_snapshot``) or gets one
+    (``_snapshot_of``).
 
-    ``pyarrow.dataset`` reads the manifest, the ``deletes/`` index and
-    the pages' metadata columns (``_META_COLS``) of the live runs, never
-    a page blob. Driver memory: one metadata row per live page (plus the
-    manifest and delete index, one row per part); a bloom probe adds the
-    probed column's bloom rows (``bloom_pairs``). From that it answers,
-    without a Spark job: the live (part_id, run_id) set (``replaces``
-    tombstones and the ``as_of`` cut-off applied), the column layout,
-    zone-map survivors and bloom survivors. ``frame`` turns a survivor
-    set into the pages DataFrame to decode."""
+    Two readers bring the metadata to the driver:
 
-    def __init__(self, dst: str, files: list[str], live: set,
-                 meta: pa.Table, del_pairs: set, cutoff: int | None):
-        self.dst = dst
-        self.files = files                  # the live runs' pages files
-        self.live = live                    # manifest-live pairs
-        self.meta = meta                    # their pages' metadata rows,
-        #                                     with __file/__row positions
-        self.del_pairs = del_pairs          # live pairs with delete rows
-        self.cutoff = cutoff                # as_of, epoch us, or None
+    - a dataset on a local filesystem is read with pyarrow: the
+      manifest and the ``deletes/`` index at ``read``, the live runs'
+      metadata columns at first use, and a probed column's bloom rows
+      page by page (``interop.read_rows``);
+    - any other dataset, and any other frame (``of``: an in-memory
+      ``encode_table`` frame, a filtered or joined read), is read with
+      Spark ``toArrow()``: the same tables from explicit-schema queries
+      (``_meta_query``, ``_bloom_query``), one collect each.
+
+    Driver memory is the same for both: one metadata row per live page,
+    one manifest row per part and one delete row per (part, delete),
+    plus one bloom row (params and the ``bloom_bits`` bit array) per
+    indexed part of each probed column."""
+
+    def __init__(self, keys: list[str], live: set, del_pairs: set):
+        self.keys = keys                # the pair columns (_pair_keys)
+        self.live = live                # live pairs
+        self.del_pairs = del_pairs      # live pairs with delete rows
+        self.manifest = None            # a dataset's live manifest rows
+        self.deletes = None             # ... and its live delete rows
+        self.dst = None
+        self.cutoff = None              # as_of, epoch us, or None
+        self.pages_dir = None           # pyarrow reader: local pages dir
+        self.source = None              # Spark reader: the queried frame
+        self.files: list[str] = []      # pyarrow reader: meta's __file
+        self._blooms: dict = {}         # column -> its bloom rows
 
     @classmethod
     def read(cls, spark: SparkSession, dst: str, as_of=None,
-             deletes: bool = True) -> "_Snapshot | None":
-        """None when the dataset is not on a local filesystem, has no
-        manifest, or ``as_of`` is in a form only Spark parses — the
-        caller then plans with Spark jobs as before."""
+             deletes: bool = True) -> "_Snapshot":
+        """A durable dataset's snapshot: the live manifest and delete
+        rows now, the pages' metadata at first use."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
         root = _local_root(dst)
-        if root is None or not os.path.isdir(os.path.join(root, "manifest")):
-            return None
-        cutoff = None
-        if as_of is not None:
-            cutoff = _as_of_micros(spark, as_of)
-            if cutoff is None:
-                return None
-        mani = ds.dataset(os.path.join(root, "manifest"), format="parquet",
-                          schema=_MANIFEST_ARROW).to_table()
-        if cutoff is not None:
-            mani = mani.filter(pc.less_equal(
-                mani["committed_at"].cast(pa.int64()), cutoff))
+        local = root is not None and os.path.isdir(
+            os.path.join(root, "manifest"))
+        cutoff = None if as_of is None else _as_of_micros(spark, as_of)
+
+        def load(sub, schema, spark_read, stamp):
+            """One metadata table, cut at ``as_of``."""
+            t = schema.empty_table()
+            if local and os.path.isdir(os.path.join(root, sub)):
+                t = ds.dataset(os.path.join(root, sub), format="parquet",
+                               schema=schema).to_table()
+            elif not local and (df := spark_read(spark, dst)) is not None:
+                t = _to_arrow(df, schema)
+            return t if cutoff is None else t.filter(
+                pc.less_equal(t[stamp].cast(pa.int64()), cutoff))
+
+        mani = load("manifest", _MANIFEST_ARROW, _read_manifest,
+                    "committed_at")
         tomb = pc.list_flatten(mani["replaces"])
         dead = set(zip(pc.struct_field(tomb, [0]).to_pylist(),
                        pc.struct_field(tomb, [1]).to_pylist()))
+        mani = _where_pairs(mani, lambda p: p not in dead)
         live = set(zip(mani["part_id"].to_pylist(),
-                       mani["run_id"].to_pylist())) - dead
-        live_tbl = pa.Table.from_pylist(
-            [{"part_id": p, "run_id": r} for p, r in live],
-            schema=pa.schema(_ARROW_PAIR))
-        pages_dir = os.path.join(root, "pages")
-        files: list[str] = []
-        meta = _META_SCHEMA.empty_table()
-        if live and os.path.isdir(pages_dir):
-            runs = sorted({r for _, r in live})
+                       mani["run_id"].to_pylist()))
+        dels = _DELETES_ARROW.empty_table()
+        if deletes:
+            dels = _where_pairs(load("deletes", _DELETES_ARROW,
+                                     _read_deletes, "created_at"),
+                                live.__contains__)
+        snap = cls(["part_id", "run_id"], live,
+                   set(zip(dels["part_id"].to_pylist(),
+                           dels["run_id"].to_pylist())))
+        snap.manifest, snap.deletes = mani, dels
+        snap.dst, snap.cutoff = dst, cutoff
+        pages_dir = os.path.join(dst, "pages")
+        if live and local and os.path.isdir(os.path.join(root, "pages")):
+            snap.pages_dir = os.path.join(root, "pages")
+        elif live and not local and _exists(spark, pages_dir):
+            runs = ", ".join(_sql_str(r) for r in sorted({r for _, r in live}))
+            snap.source = (_read_pages(spark, pages_dir)
+                           .filter(f"run_id IN ({runs})"))
+        return snap
+
+    @classmethod
+    def of(cls, pages: DataFrame, probe: str | None = None) -> "_Snapshot":
+        """A frame's snapshot from ONE Spark collect of its metadata
+        rows; with ``probe`` the same collect brings that column's bloom
+        rows. Every pair the frame holds is live."""
+        import pyarrow.compute as pc
+        query = _meta_query(pages)
+        if probe is not None:
+            query = query.withColumns({
+                "params": F.lit(None).cast("string"),
+                "data": F.lit(None).cast("binary")}).unionByName(
+                    _bloom_query(pages, probe))
+        t = query.toArrow()
+        keys = _pair_keys(pages)
+        meta = t
+        if probe is not None:
+            meta = t.filter(pc.is_null(t["data"])).drop_columns(
+                ["params", "data"])
+        pairs = list(zip(*(meta[k].to_pylist() for k in keys)))
+        snap = cls(keys, set(pairs),
+                   {p for p, c in zip(pairs, meta["codec"].to_pylist())
+                    if c == DELETE_CODEC})
+        snap.meta = meta
+        snap.source = pages
+        if probe is not None:
+            snap._blooms[probe] = t.filter(pc.is_valid(t["data"]))
+        return snap
+
+    @functools.cached_property
+    def meta(self) -> pa.Table:
+        """The live pairs' metadata rows, read at first use; the pyarrow
+        reader adds each row's file (``__file``) and position
+        (``__row``)."""
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+        t = _META_SCHEMA.empty_table()
+        if self.source is not None:
+            t = _to_arrow(_meta_query(self.source), _META_SCHEMA)
+        elif self.pages_dir is not None:
+            runs = sorted({r for _, r in self.live})
             parts = []
-            for frag in _pages_dataset(pages_dir).get_fragments(
+            pages = ds.dataset(
+                self.pages_dir, format="parquet", schema=_PAGES_DS_SCHEMA,
+                partitioning=ds.partitioning(
+                    pa.schema([("run_id", pa.string())]), flavor="hive"))
+            for frag in pages.get_fragments(
                     filter=ds.field("run_id").isin(runs)):
                 t = pq.ParquetFile(frag.path).read(
                     columns=[c for c in _META_COLS if c != "run_id"])
@@ -1289,45 +1334,45 @@ class _Snapshot:
                 rid = ds.get_partition_keys(frag.partition_expression)
                 t = (t.append_column("run_id",
                                      pa.array([rid["run_id"]] * n, pa.string()))
+                     .select(_META_COLS).cast(_META_SCHEMA)
                      .append_column("__file", pa.array(
-                         np.full(n, len(files), np.int32)))
+                         np.full(n, len(self.files), np.int32)))
                      .append_column("__row", pa.array(
                          np.arange(n, dtype=np.int64))))
-                parts.append(t.select(_META_SCHEMA.names).cast(_META_SCHEMA))
-                files.append(frag.path)
-            if parts:
-                meta = pa.concat_tables(parts).join(
-                    live_tbl, ["part_id", "run_id"], join_type="left semi")
-        del_pairs: set = set()
-        del_dir = os.path.join(root, "deletes")
-        if deletes and os.path.isdir(del_dir):
-            d = ds.dataset(del_dir, format="parquet",
-                           schema=_DELETES_ARROW).to_table()
-            if cutoff is not None:
-                d = d.filter(pc.less_equal(
-                    d["created_at"].cast(pa.int64()), cutoff))
-            del_pairs = set(zip(d["part_id"].to_pylist(),
-                                d["run_id"].to_pylist())) & live
-        return cls(dst, files, live, meta, del_pairs, cutoff)
+                parts.append(t)
+                self.files.append(frag.path)
+            t = pa.concat_tables(parts) if parts else _META_SCHEMA.empty_table()
+        live = pa.Table.from_pylist(
+            [{"part_id": p, "run_id": r} for p, r in self.live],
+            schema=pa.schema(_ARROW_PAIR))
+        return t.join(live, ["part_id", "run_id"], join_type="left semi")
 
     def _rows(self, *names, where=None) -> list:
         t = self.meta if where is None else self.meta.filter(where)
         return list(zip(*(t[n].to_pylist() for n in names)))
 
-    def layout(self) -> list[tuple[str, str]]:
+    def layout(self, pairs: set | None = None) -> list[tuple[str, str]]:
+        """The columns [(name, tag), ...] in col_idx order, of ``pairs``
+        when given, else of every live pair."""
+        return _first_by_name(
+            (c, t) for _, c, t in sorted(self.layout_rows(pairs)))
+
+    def layout_rows(self, pairs: set | None = None) -> set:
+        """The (col_idx, column, type) triples of the data pages."""
         import pyarrow.compute as pc
-        rows = sorted(set(self._rows(
-            "col_idx", "column", "type",
-            where=pc.greater_equal(self.meta["col_idx"], 0))))
-        return _first_by_name((c, t) for _, c, t in rows)
+        k = len(self.keys)
+        rows = self._rows(*self.keys, "col_idx", "column", "type",
+                          where=pc.greater_equal(self.meta["col_idx"], 0))
+        return {r[k:] for r in rows if pairs is None or r[:k] in pairs}
 
     def page_pairs(self) -> set:
         """Live pairs that hold any page row."""
-        return set(self._rows("part_id", "run_id"))
+        return set(self._rows(*self.keys))
 
     def zone_pairs(self, column: str, lo, hi, tag: str | None) -> set:
         """Pairs whose zone maps for ``column`` may intersect [lo, hi]
-        (``prune_parts`` semantics, bounds in the zone domain)."""
+        (bounds in the zone domain, see ``prune_parts``); with no bound,
+        every pair holding a page of ``column``."""
         import pyarrow.compute as pc
         cast = _zone_cast(tag)
         conv = _zone_domain(cast)
@@ -1335,54 +1380,80 @@ class _Snapshot:
             # bounds may be str/Decimal/int/float, as in _zone_lit
             lo, hi = (None if b is None else conv(b) for b in (lo, hi))
         m = self.meta
+        k = len(self.keys)
         keep: set = set()
-        for p, r, mn, mx in self._rows(
-                "part_id", "run_id", "min_v", "max_v",
-                where=pc.and_(pc.equal(m["column"], column),
-                              pc.greater_equal(m["col_idx"], 0))):
-            if (p, r) not in keep and _zone_may_hit(mn, mx, lo, hi, conv):
-                keep.add((p, r))
+        for r in self._rows(*self.keys, "min_v", "max_v",
+                            where=pc.and_(pc.equal(m["column"], column),
+                                          pc.greater_equal(m["col_idx"], 0))):
+            if r[:k] not in keep and _zone_may_hit(*r[k:], lo, hi, conv):
+                keep.add(r[:k])
         return keep
+
+    def sidecar_pairs(self, column: str, codec: str) -> set:
+        """Pairs holding a ``codec`` sidecar row for ``column``."""
+        import pyarrow.compute as pc
+        m = self.meta
+        return set(self._rows(*self.keys, where=pc.and_(
+            pc.equal(m["codec"], codec), pc.equal(m["column"], column))))
+
+    def _bloom_rows(self, column: str) -> pa.Table:
+        """``column``'s bloom rows (keys, ``params``, ``data``), read once.
+        The pyarrow reader locates them from the metadata rows and
+        decodes only the parquet pages of ``params``/``data`` that hold
+        them (a ``data`` page may also hold page blobs); the Spark reader
+        collects ``_bloom_query``."""
+        if column in self._blooms:
+            return self._blooms[column]
+        if self.source is not None:
+            t = _bloom_query(self.source, column).toArrow()
+        else:
+            import pyarrow.compute as pc
+            m = self.meta
+            t = m.filter(pc.and_(pc.equal(m["codec"], "__bloom__"),
+                                 pc.equal(m["column"], column))).sort_by(
+                [("__file", "ascending"), ("__row", "ascending")])
+            fidx = t["__file"].to_numpy()
+            pos = t["__row"].to_numpy()
+            blobs = {"params": [], "data": []}
+            for f in np.unique(fidx):
+                for c, got in blobs.items():
+                    got.append(read_rows(self.files[int(f)], c,
+                                         pos[fidx == f]))
+            for c, got in blobs.items():
+                t = t.append_column(c, pa.chunked_array(got))
+        self._blooms[column] = t
+        return t
+
+    def bloom_hits(self, column: str, hashes: np.ndarray) -> set:
+        """Pairs whose bloom rows for ``column`` MAYBE hold any of
+        ``hashes`` (``_probe_hashes``)."""
+        if not self.sidecar_pairs(column, "__bloom__"):
+            return set()
+        t = self._bloom_rows(column)
+        maybe = _bloom_maybe(t["params"].to_pylist(), t["data"], hashes)
+        pairs = zip(*(t[k].to_pylist() for k in self.keys))
+        return {p for p, h in zip(pairs, maybe) if h} & self.live
 
     def bloom_pairs(self, column: str, values: list) -> set | None:
         """Bloom MAYBE-hit pairs for ``values`` plus every pair with no
         bloom row for ``column`` (absence means scan); None when the
-        column has no bloom rows at all. The metadata rows locate the
-        column's bloom rows in their files, and ``interop.read_rows``
-        decodes only the parquet pages of ``params``/``data`` that hold
-        them (a ``data`` page may also hold page blobs)."""
-        import pyarrow.compute as pc
-        m = self.meta
-        where = pc.and_(pc.equal(m["codec"], "__bloom__"),
-                        pc.equal(m["column"], column))
-        indexed = set(self._rows("part_id", "run_id", where=where))
+        column has no bloom rows at all."""
+        indexed = self.sidecar_pairs(column, "__bloom__")
         if not indexed:
             return None
-        hits: set = set()
         hashes = _probe_hashes(values)
-        if hashes is not None:
-            rows = m.filter(where).sort_by([("__file", "ascending"),
-                                            ("__row", "ascending")])
-            fidx = rows["__file"].to_numpy()
-            pos = rows["__row"].to_numpy()
-            pairs = list(zip(rows["part_id"].to_pylist(),
-                             rows["run_id"].to_pylist()))
-            for f in np.unique(fidx):
-                at = np.flatnonzero(fidx == f)
-                path = self.files[int(f)]
-                maybe = _bloom_maybe(
-                    read_rows(path, "params", pos[at]).to_pylist(),
-                    read_rows(path, "data", pos[at]), hashes)
-                hits.update(pairs[i] for i, h in zip(at, maybe) if h)
+        hits = set() if hashes is None else self.bloom_hits(column, hashes)
         return hits | (self.page_pairs() - indexed)
 
     def frame(self, spark: SparkSession) -> DataFrame:
-        """Pages plus delete rows of every live pair, planned without a
-        job: explicit-schema reads of the live runs' directories, cut by
+        """A dataset's pages plus delete rows of every live pair, planned
+        without a job: explicit-schema reads of the live runs, cut by
         ``_keep_parts`` (literal ``run_id IN`` and pair filters).
         Carries the snapshot and its layout like ``encode_table`` output
         carries ``_cps_columns``."""
-        if self.meta.num_rows:
+        if self.source is not None:
+            pages = self.source
+        elif self.meta.num_rows:
             # Spark lists only the live runs' directories, not every run's
             pages_dir = os.path.join(self.dst, "pages")
             run_dirs = sorted({os.path.basename(os.path.dirname(f))
@@ -1402,47 +1473,54 @@ class _Snapshot:
             pages = pages.union(_deletes_as_page_rows(dels))
         # one cut for both sides: Spark pushes it through the union into
         # each scan (run_id IN becomes the pages' partition filter)
-        pages = _keep_parts(pages, self.live, ["part_id", "run_id"])
+        pages = _keep_parts(pages, self.live, self.keys)
         pages._cps_snapshot = self             # type: ignore[attr-defined]
         pages._cps_columns = self.layout()     # type: ignore[attr-defined]
         return pages
 
 
+def _snapshot_of(pages: DataFrame, probe: str | None = None) -> _Snapshot:
+    """The snapshot a frame carries (a durable read's), else one taken
+    from the frame (``_Snapshot.of``) and cached on it. A frame's
+    snapshot is taken at its first plan: a frame over files that later
+    grow plans from what they held then."""
+    snap = getattr(pages, "_cps_snapshot", None)
+    if snap is None:
+        snap = _Snapshot.of(pages, probe)
+        pages._cps_snapshot = snap             # type: ignore[attr-defined]
+    return snap
+
+
+def _where_pairs(t: pa.Table, keep) -> pa.Table:
+    """Rows of ``t`` whose (part_id, run_id) satisfies ``keep``."""
+    return t.filter(pa.array(
+        [keep(p) for p in zip(t["part_id"].to_pylist(),
+                              t["run_id"].to_pylist())], pa.bool_()))
+
+
+def _to_arrow(df: DataFrame, schema: pa.Schema) -> pa.Table:
+    """``schema``'s columns of ``df``, collected with ``toArrow()``."""
+    return df.select(*schema.names).toArrow().cast(schema)
+
+
 _PAGES_DS_SCHEMA = _PAGES_ARROW.append(pa.field("run_id", pa.string()))
-#: snapshot metadata rows: _META_COLS plus each row's file and position
-_META_SCHEMA = pa.schema([_PAGES_DS_SCHEMA.field(c) for c in _META_COLS]
-                         + [("__file", pa.int32()), ("__row", pa.int64())])
+_META_SCHEMA = pa.schema([_PAGES_DS_SCHEMA.field(c) for c in _META_COLS])
 _MANIFEST_ARROW = pa.schema(_ARROW_PAIR + [
-    ("committed_at", pa.timestamp("us")),
+    ("table", pa.string()), ("num_rows", pa.int64()),
+    ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("num_parts", pa.int32()), ("committed_at", pa.timestamp("us")),
     ("replaces", pa.list_(pa.struct(_ARROW_PAIR)))])
-_DELETES_ARROW = pa.schema(_ARROW_PAIR + [("created_at", pa.timestamp("us"))])
-
-
-def _pages_dataset(pages_dir: str):
-    """pyarrow view of the pages dir, ``run_id`` a string partition."""
-    import pyarrow.dataset as ds
-    return ds.dataset(pages_dir, format="parquet", schema=_PAGES_DS_SCHEMA,
-                      partitioning=ds.partitioning(
-                          pa.schema([("run_id", pa.string())]),
-                          flavor="hive"))
+_DELETES_ARROW = pa.schema(_ARROW_PAIR + [("delete_id", pa.string()),
+                                          ("created_at", pa.timestamp("us"))])
 
 
 def read_committed_pages(spark: SparkSession, dst: str,
                          as_of=None) -> DataFrame:
-    """Pages joined against the LIVE manifest — orphans from crashed runs
-    and compaction-superseded parts both drop out. ``as_of`` reads the
-    snapshot as of that commit timestamp. A local dataset's frame is
-    planned on the driver from a ``_Snapshot`` (see ``read_live_pages``
-    for its memory footprint) and runs no Spark job to build."""
-    snap = _Snapshot.read(spark, dst, as_of, deletes=False)
-    if snap is not None:
-        return snap.frame(spark)
-    pages = _read_pages(spark, os.path.join(dst, "pages"))
-    mani = _read_manifest(spark, dst)
-    if as_of is not None:
-        mani = _manifest_cutoff(mani, as_of)
-    committed = live_manifest(mani).select("part_id", "run_id")
-    return pages.join(F.broadcast(committed), ["part_id", "run_id"], "left_semi")
+    """Pages of the LIVE manifest pairs — orphans from crashed runs and
+    compaction-superseded parts both drop out. ``as_of`` reads the
+    snapshot as of that commit timestamp. Planned from a ``_Snapshot``
+    (see ``read_live_pages`` for its cost) that rides on the frame."""
+    return _Snapshot.read(spark, dst, as_of, deletes=False).frame(spark)
 
 
 #: compacted parts get ids above this base so they never collide with
@@ -1473,20 +1551,14 @@ def compact_parts(spark: SparkSession, dst: str,
     duplicate or a hole."""
     from pyspark.sql.window import Window
     run_id = run_id or uuid.uuid4().hex[:12]
-    live = live_manifest(_read_manifest(spark, dst))
-    rows = live.select("table", "part_id", "run_id", "enc_bytes",
-                       "num_parts").collect()
+    snap = _Snapshot.read(spark, dst)
+    rows = snap.manifest.to_pylist()
     # parts carrying deletion vectors stay uncompacted: moving their
     # pages would re-key the (part_id, run_id) the bitmaps point at.
     # (A rewrite-compaction that APPLIES the vectors is the eventual
     # maintenance op; until then exclusion is the safe semantics.)
-    dels = _read_deletes(spark, dst)
-    protected: set = set()
-    if dels is not None:
-        protected = {(r["part_id"], r["run_id"]) for r in
-                     dels.select("part_id", "run_id").distinct().collect()}
     small = sorted((r for r in rows if r["enc_bytes"] < min_bytes
-                    and (r["part_id"], r["run_id"]) not in protected),
+                    and (r["part_id"], r["run_id"]) not in snap.del_pairs),
                    key=lambda r: (r["table"], r["part_id"]))
     out = {"run_id": run_id, "bins": 0, "parts_compacted": 0,
            "bytes_moved": 0}
@@ -1650,62 +1722,42 @@ def decode_dataset(spark: SparkSession, dst: str,
 
 
 def eq_prune(pages: DataFrame, column: str, value) -> DataFrame:
-    """Part ids whose bloom filter MAYBE contains ``value`` (metadata-only
-    distributed scan over the 16 KiB-per-part sidecar rows — never the
-    data blobs; at 100 TB the bloom rows are ~0.03% of the dataset).
-    Requires the column in ``EncodeConfig.bloom_cols`` at encode time;
-    zone maps handle range predicates, blooms handle point lookups on
+    """Part ids whose bloom filter MAYBE contains ``value``, probed on
+    the driver against the frame's snapshot, which reads only the
+    column's bloom rows (16 KiB per part — never the data blobs; at
+    100 TB the bloom rows are ~0.03% of the dataset). Requires the
+    column in ``EncodeConfig.bloom_cols`` at encode time; zone maps
+    handle range predicates, blooms handle point lookups on
     hash-distributed columns where min/max never prunes."""
     return in_prune(pages, column, [value])
 
 
 def in_prune(pages: DataFrame, column: str, values: list) -> DataFrame:
     """IN-list variant: part ids whose bloom maybe-contains ANY of the
-    probe values — all probes checked in ONE metadata scan (a batched
-    point-lookup is one pass regardless of list size).
+    probe values — all probes checked in ONE pass over the column's
+    bloom rows (``_Snapshot.bloom_hits``), returned as a local
+    DataFrame. Parts with no bloom row are not in it (callers that
+    must scan them use ``_Snapshot.bloom_pairs``).
 
     Safe across mixed encode runs: each bloom row's own ``m`` (bit
-    count) is honored — rows are grouped by m inside the kernel, so a
-    dataset whose bloom_bits changed between appends never computes a
-    wrong bit position (which would be a silent false NEGATIVE). When
-    the pages carry ``run_id`` (durable datasets), the result keeps it:
-    appended runs reuse the hash part-id space, so (part_id, run_id) is
-    the true pruning unit — part_id alone would let run B's bloom veto
-    run A's pages."""
-    keys = (["part_id", "run_id"] if "run_id" in pages.columns
-            else ["part_id"])
-    fields = [T.StructField("part_id", T.IntegerType())]
-    if len(keys) == 2:
-        fields.append(T.StructField("run_id", T.StringType()))
-    out_schema = T.StructType(fields)
+    count) is honored (``_bloom_maybe``), so a dataset whose bloom_bits
+    changed between appends never computes a wrong bit position (which
+    would be a silent false NEGATIVE). When the pages carry ``run_id``
+    (durable datasets), the result keeps it: appended runs reuse the
+    hash part-id space, so (part_id, run_id) is the true pruning unit —
+    part_id alone would let run B's bloom veto run A's pages."""
     hs = _probe_hashes(values)
-    if hs is None:
-        spark = pages.sparkSession
-        return spark.createDataFrame([], out_schema)
-    rows = pages.filter((F.col("codec") == "__bloom__")
-                        & (F.col("column") == column)) \
-                .select(*keys, "params", "data")
-    arrow_fields = [("part_id", pa.int32())]
-    if len(keys) == 2:
-        arrow_fields.append(("run_id", pa.string()))
-    arrow_schema = pa.schema(arrow_fields)
+    hits = (set() if hs is None
+            else _snapshot_of(pages, column).bloom_hits(column, hs))
+    return _pairs_frame(pages.sparkSession, hits, _pair_keys(pages))
 
-    def kernel(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            taken = b.filter(pa.array(_bloom_maybe(
-                b.column("params").to_pylist(), b.column("data"), hs)))
-            out = {"part_id": taken.column("part_id").cast(pa.int32())}
-            if len(keys) == 2:
-                out["run_id"] = taken.column("run_id")
-            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
-    # distinct: a compacted bin carries one bloom row per SOURCE part
-    # (each covering its row slice; any-match across them is the correct
-    # union), so the same (part_id, run_id) can hit several times — the
-    # result contract is a part-id SET, and it is metadata-sized
-    return rows.mapInArrow(kernel, out_schema).dropDuplicates(keys)
+def _pairs_frame(spark: SparkSession, pairs: set,
+                 keys: list[str]) -> DataFrame:
+    """A local DataFrame of (part_id[, run_id]) key tuples."""
+    return spark.createDataFrame(
+        sorted(pairs), "part_id int, run_id string" if len(keys) == 2
+        else "part_id int")
 
 
 #: survivor lists up to this size are applied as a LITERAL part_id
@@ -1716,11 +1768,9 @@ def in_prune(pages: DataFrame, column: str, values: list) -> DataFrame:
 _MAX_LITERAL_PRUNE = 32768
 
 
-def _keep_parts(pages: DataFrame, survivors,
+def _keep_parts(pages: DataFrame, survivors: set,
                 keys: list[str]) -> DataFrame:
-    """pages restricted to the survivor (part_id[, run_id]) set: a set of
-    key tuples, or a metadata-sized DataFrame (one row per surviving
-    part) collected here.
+    """pages restricted to the survivor (part_id[, run_id]) key tuples.
 
     With run ids the cut starts with a literal ``run_id IN (...)``: on
     the run-partitioned pages that prunes whole run directories. Up to
@@ -1730,8 +1780,6 @@ def _keep_parts(pages: DataFrame, survivors,
     pair predicate; above it a broadcast semi join against a local frame
     of the survivors. Filters are SQL text: one py4j call, where a
     Column per literal costs several."""
-    if isinstance(survivors, DataFrame):
-        survivors = {tuple(r) for r in survivors.select(*keys).collect()}
     rows = sorted(survivors)
     if not rows:
         return pages.limit(0)
@@ -1740,9 +1788,7 @@ def _keep_parts(pages: DataFrame, survivors,
         runs = ", ".join(_sql_str(r) for r in sorted({r for _, r in rows}))
         cut.append(f"run_id IN ({runs})")
     if len(rows) > _MAX_LITERAL_PRUNE:
-        schema = ("part_id int, run_id string" if len(keys) == 2
-                  else "part_id int")
-        local = pages.sparkSession.createDataFrame(rows, schema)
+        local = _pairs_frame(pages.sparkSession, survivors, keys)
         if cut:
             pages = pages.filter(cut[0])
         return pages.join(F.broadcast(local), keys, "left_semi")
@@ -1763,21 +1809,23 @@ def decode_where_in(pages: DataFrame, column: str, values: list,
     """Batched point-lookup decode: one bloom probe for the whole IN
     list, decode the surviving parts once, exact residual filter.
 
-    On a durable read's frame (``read_live_pages``) the probe runs on
-    the driver against its snapshot, which then also holds the probed
-    column's bloom rows (one per indexed part), and planning runs no
-    Spark job. Falls back to a full decode when the column carries no
-    bloom rows (not in ``bloom_cols`` at encode time) — an absent index
-    must mean "scan", never "empty result"."""
-    cols_hint = _column_layout(pages)
+    The probe runs on the driver against the frame's snapshot
+    (``_Snapshot.bloom_pairs``), which then also holds the probed
+    column's bloom rows (one per indexed part): on a durable read's
+    frame (``read_live_pages``) planning runs no Spark job, on any other
+    frame one collect of its metadata and those bloom rows. Parts
+    without a bloom row for the column are kept, and a column with no
+    bloom rows at all (not in ``bloom_cols`` at encode time) decodes in
+    full — an absent index must mean "scan", never "empty result"."""
     if not values:
-        return decode_table(pages.limit(0), spark, columns=cols_hint)
-    keys = (["part_id", "run_id"] if "run_id" in pages.columns
-            else ["part_id"])
-    survivors = _bloom_candidate_parts(pages, column, values, keys)
+        return decode_table(pages.limit(0), spark,
+                            columns=_column_layout(pages))
+    snap = _snapshot_of(pages, column)
+    cols_hint = _column_layout(pages)
+    survivors = snap.bloom_pairs(column, values)
     kept = pages
     if survivors is not None:
-        kept = _keep_parts(pages, survivors, keys)
+        kept = _keep_parts(pages, survivors, snap.keys)
     dec = decode_table(kept, spark, columns=cols_hint)
     return dec.filter(F.col(column).isin(values))
 
@@ -1813,29 +1861,6 @@ def _read_deletes(spark: SparkSession, dst: str) -> DataFrame | None:
     if not _exists(spark, d):
         return None
     return spark.read.schema(DELETES_SCHEMA).parquet(d)
-
-
-def _bloom_candidate_parts(pages: DataFrame, column: str, values: list,
-                           keys: list[str]) -> "set | DataFrame | None":
-    """Shared absence-means-scan candidate discovery (decode_where_in /
-    delete_where_in / update_where): bloom MAYBE-hit parts UNION every
-    part carrying no bloom row for the column — at (part_id, run_id)
-    granularity when available, since appended runs reuse the hash
-    part-id space. Returns None when the column has no bloom rows at
-    all (callers must scan everything rather than prune). A frame with
-    a snapshot answers on the driver (a set of pairs); any other frame
-    gets a lazy DataFrame. ``_keep_parts`` takes either."""
-    snap = getattr(pages, "_cps_snapshot", None)
-    if snap is not None:
-        return snap.bloom_pairs(column, values)
-    bloom_rows = pages.filter((F.col("codec") == "__bloom__")
-                              & (F.col("column") == column))
-    if not bool(bloom_rows.limit(1).take(1)):
-        return None
-    bloom_parts = bloom_rows.select(*keys).distinct()
-    unindexed = (pages.select(*keys).distinct()
-                 .join(bloom_parts, keys, "left_anti"))
-    return in_prune(pages, column, values).unionByName(unindexed).distinct()
 
 
 def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
@@ -1921,12 +1946,11 @@ def delete_where_in(spark: SparkSession, dst: str, column: str,
     if not values:
         return {"parts": 0, "rows_deleted": 0}
     pages = read_committed_pages(spark, dst)
-    keys = (["part_id", "run_id"] if "run_id" in pages.columns
-            else ["part_id"])
+    snap = pages._cps_snapshot
     hot = pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
-    surv = _bloom_candidate_parts(pages, column, values, keys)
+    surv = snap.bloom_pairs(column, values)
     if surv is not None:
-        hot = _keep_parts(hot, surv, keys)
+        hot = _keep_parts(hot, surv, snap.keys)
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -1954,15 +1978,11 @@ def delete_where_range(spark: SparkSession, dst: str, column: str,
     if lo is None and hi is None:
         return {"parts": 0, "rows_deleted": 0}
     pages = read_committed_pages(spark, dst)
-    hot = pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
+    snap = pages._cps_snapshot
     tag = _column_tag(pages, column, None)
-    snap = getattr(pages, "_cps_snapshot", None)
-    if snap is not None:
-        hot = _keep_parts(hot, snap.zone_pairs(column, lo, hi, tag),
-                          ["part_id", "run_id"])
-    else:
-        surv = prune_parts(pages, column, lo=lo, hi=hi, tag=tag)
-        hot = hot.join(F.broadcast(surv), ["part_id"], "left_semi")
+    hot = _keep_parts(
+        pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0)),
+        snap.zone_pairs(column, lo, hi, tag), snap.keys)
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -2004,34 +2024,21 @@ def read_live_pages(spark: SparkSession, dst: str, as_of=None) -> DataFrame:
     ``as_of`` (datetime/ISO string) gives a time-travel snapshot:
     manifest rows AND delete sidecars created later are excluded.
 
-    A local dataset is planned on the driver: one ``_Snapshot`` (manifest,
-    delete index and the pages' metadata columns, read with
-    pyarrow.dataset) fixes the live (part_id, run_id) set, and the frame
-    is built from it with explicit-schema reads and literal filters — no
-    Spark job runs until the frame does. The snapshot rides on the frame
+    The read is planned on the driver: one ``_Snapshot`` (manifest,
+    delete index and the pages' metadata columns) fixes the live
+    (part_id, run_id) set, and the frame is built from it with
+    explicit-schema reads and literal filters. For a local dataset the
+    snapshot is read with pyarrow and no Spark job runs until the frame
+    does; any other dataset's metadata comes through Spark
+    ``toArrow()``, a job per table. The snapshot rides on the frame
     (``_cps_snapshot``, with the layout in ``_cps_columns``) so that
     decode_where / decode_where_in prune on the driver too. Driver
     memory: one metadata row per live page, plus the manifest and the
     delete index (one row per part); a bloom probe adds the probed
     column's bloom rows. A frame derived from this one (filtered,
-    joined) loses the snapshot and plans with Spark jobs."""
-    snap = _Snapshot.read(spark, dst, as_of)
-    if snap is not None:
-        return snap.frame(spark)
-    pages = read_committed_pages(spark, dst, as_of=as_of)
-    dels = _read_deletes(spark, dst)
-    if dels is None:
-        return pages
-    if as_of is not None:
-        dels = dels.filter(
-            F.col("created_at") <= F.lit(as_of).cast("timestamp"))
-    mani = _read_manifest(spark, dst)
-    if as_of is not None:
-        mani = _manifest_cutoff(mani, as_of)
-    committed = live_manifest(mani).select("part_id", "run_id")
-    live_dels = _deletes_as_page_rows(dels).join(
-        F.broadcast(committed), ["part_id", "run_id"], "left_semi")
-    return pages.unionByName(live_dels.select(*pages.columns))
+    joined) takes its own snapshot at its first plan: one collect of its
+    metadata rows (``_snapshot_of``)."""
+    return _Snapshot.read(spark, dst, as_of).frame(spark)
 
 
 def table_changes(spark: SparkSession, dst: str, from_ts,
@@ -2056,43 +2063,27 @@ def table_changes(spark: SparkSession, dst: str, from_ts,
     they correctly report no logical change (at the cost of decoding the
     rewritten parts — schedule CDC reads before heavy maintenance when
     that matters). The diff itself is ``exceptAll`` both ways: one
-    shuffle over only the changed parts' rows."""
-    mani = _read_manifest(spark, dst)
-    maniB = mani if to_ts is None else _manifest_cutoff(mani, to_ts)
-    liveA = (live_manifest(_manifest_cutoff(mani, from_ts))
-             .select("part_id", "run_id").distinct())
-    liveB = live_manifest(maniB).select("part_id", "run_id").distinct()
-    candA = liveA.join(liveB, ["part_id", "run_id"], "left_anti")
-    candB = liveB.join(liveA, ["part_id", "run_id"], "left_anti")
-    dels = _read_deletes(spark, dst)
-    if dels is not None:
-        # vectors written inside the window change a part's VISIBLE rows
-        # without touching the manifest: decode those parts on both sides
-        w = dels.filter(
-            F.col("created_at") > F.lit(from_ts).cast("timestamp"))
-        if to_ts is not None:
-            w = w.filter(
-                F.col("created_at") <= F.lit(to_ts).cast("timestamp"))
-        both = liveA.join(liveB, ["part_id", "run_id"], "left_semi")
-        vch = (w.select("part_id", "run_id").distinct()
-               .join(both, ["part_id", "run_id"], "left_semi"))
-        candA = candA.unionByName(vch).distinct()
-        candB = candB.unionByName(vch).distinct()
-    pagesA = read_live_pages(spark, dst, as_of=from_ts)
-    pagesB = read_live_pages(spark, dst, as_of=to_ts)
+    shuffle over only the changed parts' rows. The two snapshots are
+    compared on the driver, so planning runs no Spark job for a local
+    dataset."""
+    a = _Snapshot.read(spark, dst, as_of=from_ts)
+    b = _Snapshot.read(spark, dst, as_of=to_ts)
+    # vectors written inside the window change a part's VISIBLE rows
+    # without touching the manifest: decode those parts on both sides
+    ids = [set(zip(*(snap.deletes[c].to_pylist()
+                     for c in ("part_id", "run_id", "delete_id"))))
+           for snap in (a, b)]
+    changed = {r[:2] for r in ids[1] - ids[0]} & a.live & b.live
     # one explicit columns hint across BOTH snapshots so schema evolution
     # inside the window diffs cleanly (a column added by a later run is
     # NULL on the A side) and an all-empty candidate set still yields a
     # typed empty frame instead of a zero-column one
-    hint = _column_layout(pagesA.select("column", "col_idx", "type")
-                          .unionByName(pagesB.select("column", "col_idx",
-                                                     "type")))
-    dfA = decode_table(
-        pagesA.join(F.broadcast(candA), ["part_id", "run_id"],
-                    "left_semi"), spark, columns=hint)
-    dfB = decode_table(
-        pagesB.join(F.broadcast(candB), ["part_id", "run_id"],
-                    "left_semi"), spark, columns=hint)
+    hint = _first_by_name(
+        (c, t) for _, c, t in sorted(a.layout_rows() | b.layout_rows()))
+    dfA, dfB = (decode_table(_keep_parts(snap.frame(spark),
+                                         (snap.live - other.live) | changed,
+                                         snap.keys), spark, columns=hint)
+                for snap, other in ((a, b), (b, a)))
     return (dfB.exceptAll(dfA)
             .withColumn("_change_type", F.lit("insert"))
             .unionByName(dfA.exceptAll(dfB)
@@ -2114,40 +2105,35 @@ def purge_deletes(spark: SparkSession, dst: str, cfg: EncodeConfig,
     parts (it re-encodes ONLY those parts, not the table)."""
     run_id = run_id or uuid.uuid4().hex[:12]
     out = {"run_id": run_id, "parts_rewritten": 0, "rows_purged": 0}
-    dels = _read_deletes(spark, dst)
-    if dels is None:
+    snap = _Snapshot.read(spark, dst)
+    tpairs = sorted(snap.del_pairs)
+    if not tpairs:
         return out
-    live = live_manifest(_read_manifest(spark, dst))
-    targets = (dels.select("part_id", "run_id").distinct()
-               .join(F.broadcast(live.select("part_id", "run_id")),
-                     ["part_id", "run_id"], "left_semi").collect())
-    if not targets:
-        return out
-    tpairs = [(int(r["part_id"]), r["run_id"]) for r in targets]
-    old_rows, new_rows = _rewrite_parts(spark, dst, cfg, run_id, tpairs)
+    old_rows, new_rows = _rewrite_parts(spark, snap, cfg, run_id, tpairs)
     out.update(parts_rewritten=len(tpairs),
                rows_purged=int(old_rows - new_rows))
     return out
 
 
-def _rewrite_parts(spark: SparkSession, dst: str, cfg: EncodeConfig,
+def _rewrite_parts(spark: SparkSession, snap: _Snapshot, cfg: EncodeConfig,
                    run_id: str, tpairs: list[tuple[int, str]],
                    transform=None) -> tuple:
     """Shared rewrite machinery (purge_deletes, rewrite_dataset,
-    update_where): decode the target (part, run)s with deletion vectors
+    update_where): decode the target (part, run)s of the dataset's
+    snapshot ``snap`` (read with its deletes) with deletion vectors
     applied, optionally apply ``transform`` (DataFrame -> DataFrame, a
     row-level rewrite such as UPDATE's SET projection — must preserve
     the schema), re-encode under ``cfg`` in a fresh run, supersede the
     targets via ``replaces`` tombstones in ONE crash-safe manifest
     append. Returns (old_live_rows, new_rows)."""
-    live = live_manifest(_read_manifest(spark, dst))
-    tdf = spark.createDataFrame(tpairs, "part_id int, run_id string")
-    old_rows = (live.join(F.broadcast(tdf), ["part_id", "run_id"],
-                          "left_semi")
-                .agg(F.sum("num_rows")).collect()[0][0]) or 0
-    kept = read_live_pages(spark, dst).join(
-        F.broadcast(tdf), ["part_id", "run_id"], "left_semi")
-    decoded = decode_table(kept, spark)          # vectors applied here
+    import pyarrow.compute as pc
+    dst = snap.dst
+    want = set(tpairs)
+    old_rows = pc.sum(_where_pairs(snap.manifest, want.__contains__)
+                      ["num_rows"]).as_py() or 0
+    kept = _keep_parts(snap.frame(spark), want, snap.keys)
+    decoded = decode_table(kept, spark,           # vectors applied here
+                           columns=snap.layout(want))
     if transform is not None:
         decoded = transform(decoded)
     # re-encode through the standard pipeline under a fresh run_id —
@@ -2170,7 +2156,7 @@ def _rewrite_parts(spark: SparkSession, dst: str, cfg: EncodeConfig,
         if n_new else 0
     if n_new:
         # every rewritten row carries the full tombstone list —
-        # live_manifest's explode+distinct kills each target once
+        # the snapshot's tombstone set kills each target once
         tomb_col = F.array(*[
             F.struct(F.lit(p).cast("int").alias("part_id"),
                      F.lit(r).alias("run_id")) for p, r in tpairs])
@@ -2201,12 +2187,11 @@ def rewrite_dataset(spark: SparkSession, dst: str, cfg: EncodeConfig,
     files stay until ``vacuum``, so time travel across the rewrite
     keeps working."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    live = live_manifest(_read_manifest(spark, dst))
-    tpairs = [(int(r["part_id"]), r["run_id"])
-              for r in live.select("part_id", "run_id").collect()]
+    snap = _Snapshot.read(spark, dst)
+    tpairs = sorted(snap.live)
     if not tpairs:
         return {"run_id": run_id, "parts_rewritten": 0, "rows": 0}
-    old_rows, new_rows = _rewrite_parts(spark, dst, cfg, run_id, tpairs)
+    old_rows, new_rows = _rewrite_parts(spark, snap, cfg, run_id, tpairs)
     return {"run_id": run_id, "parts_rewritten": len(tpairs),
             "rows": int(new_rows), "rows_purged": int(old_rows - new_rows)}
 
@@ -2225,22 +2210,17 @@ def add_column(spark: SparkSession, dst: str, name: str, expr: str,
     ALL existing rows (e.g. a quality score or token count computed once
     instead of per query). Raises if the column already exists."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    live = live_manifest(_read_manifest(spark, dst))
-    pages = read_committed_pages(spark, dst)
-    existing = {r["column"] for r in
-                pages.filter(F.col("col_idx") >= 0)
-                .select("column").distinct().collect()}
-    if name in existing:
+    snap = _Snapshot.read(spark, dst)
+    if name in dict(snap.layout()):
         raise ValueError(f"column {name!r} already exists in {dst}")
-    tpairs = [(int(r["part_id"]), r["run_id"])
-              for r in live.select("part_id", "run_id").collect()]
+    tpairs = sorted(snap.live)
     if not tpairs:
         return {"run_id": run_id, "parts_rewritten": 0, "rows": 0}
 
     def transform(d: DataFrame) -> DataFrame:
         return d.withColumn(name, F.expr(expr))
 
-    old_rows, new_rows = _rewrite_parts(spark, dst, cfg, run_id, tpairs,
+    old_rows, new_rows = _rewrite_parts(spark, snap, cfg, run_id, tpairs,
                                         transform=transform)
     return {"run_id": run_id, "parts_rewritten": len(tpairs),
             "rows": int(new_rows)}
@@ -2254,9 +2234,8 @@ def drop_column(spark: SparkSession, dst: str, name: str,
     (no rewrite), read through ``decode_dataset(columns=...)`` instead —
     this op is for physically reclaiming the column's bytes."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    live = live_manifest(_read_manifest(spark, dst))
-    tpairs = [(int(r["part_id"]), r["run_id"])
-              for r in live.select("part_id", "run_id").collect()]
+    snap = _Snapshot.read(spark, dst)
+    tpairs = sorted(snap.live)
     if not tpairs:
         return {"run_id": run_id, "parts_rewritten": 0, "rows": 0}
 
@@ -2265,7 +2244,7 @@ def drop_column(spark: SparkSession, dst: str, name: str,
             raise ValueError(f"column {name!r} not present")
         return d.drop(name)
 
-    old_rows, new_rows = _rewrite_parts(spark, dst, cfg, run_id, tpairs,
+    old_rows, new_rows = _rewrite_parts(spark, snap, cfg, run_id, tpairs,
                                         transform=transform)
     return {"run_id": run_id, "parts_rewritten": len(tpairs),
             "rows": int(new_rows)}
@@ -2373,8 +2352,7 @@ def column_agg_fast(pages: DataFrame, column: str,
     # part-id space, so a part_id can hold a pre-sidecar run AND a
     # sidecar-bearing run — part_id-only coverage would call that
     # covered and return a silently partial sum.
-    gkeys = (["part_id", "run_id"] if "run_id" in pages.columns
-             else ["part_id"])
+    gkeys = _pair_keys(pages)
     per = rel.groupBy(*gkeys).agg(
         F.coalesce(F.sum(F.when(is_data, F.col("num_values")
                                 - F.col("null_count"))),
@@ -2490,15 +2468,9 @@ def column_ndv_fast(pages: DataFrame, column: str) -> dict | None:
     values; deleted rows may still be counted — documented upper-bound
     semantics)."""
     import pandas as pd
-    keys = (["part_id", "run_id"] if "run_id" in pages.columns
-            else ["part_id"])
-    hot_parts = (pages.filter((F.col("column") == column)
-                              & (F.col("col_idx") >= 0))
-                 .select(*keys).distinct())
-    hll_parts = (pages.filter((F.col("codec") == "__hll__")
-                              & (F.col("column") == column))
-                 .select(*keys).distinct())
-    if hot_parts.join(hll_parts, keys, "left_anti").limit(1).count():
+    snap = _snapshot_of(pages)
+    if (snap.zone_pairs(column, None, None, None)       # pairs with pages
+            - snap.sidecar_pairs(column, "__hll__")):
         return None
     rows = pages.filter((F.col("codec") == "__hll__")
                         & (F.col("column") == column)) \
@@ -2561,14 +2533,9 @@ def update_where(spark: SparkSession, dst: str, column: str, values: list,
     # live pages INCLUDING deletion-vector rows: the updated-row count
     # must not count rows already deleted (decode_table applies them)
     pages = read_live_pages(spark, dst)
-    keys = ["part_id", "run_id"]
-    allp = {tuple(r) for r in
-            pages.filter((F.col("column") == column)
-                         & (F.col("col_idx") >= 0))
-            .select(*keys).distinct().collect()}
-    surv = _bloom_candidate_parts(pages, column, values, keys)
-    if isinstance(surv, DataFrame):
-        surv = {tuple(r) for r in surv.collect()}
+    snap = pages._cps_snapshot
+    allp = snap.zone_pairs(column, None, None, None)   # pairs with pages
+    surv = snap.bloom_pairs(column, values)
     tpairs = sorted(allp if surv is None else surv & allp)
     if not tpairs:
         return {"parts_rewritten": 0, "rows_updated": 0, "rows": 0,
@@ -2576,8 +2543,7 @@ def update_where(spark: SparkSession, dst: str, column: str, values: list,
     match = F.col(column).isin(values)
     # exact updated-row count from the predicate column alone (one
     # narrow decode of the candidate parts' predicate pages)
-    tdf = spark.createDataFrame(tpairs, "part_id int, run_id string")
-    cand_pages = pages.join(F.broadcast(tdf), keys, "left_semi")
+    cand_pages = _keep_parts(pages, set(tpairs), snap.keys)
     tag = _column_tag(pages, column, None)
     pred = decode_table(
         cand_pages.filter(((F.col("column") == column)
@@ -2591,7 +2557,7 @@ def update_where(spark: SparkSession, dst: str, column: str, values: list,
                               .otherwise(F.col(c))
                               for c, e in set_exprs.items()})
 
-    old_rows, new_rows = _rewrite_parts(spark, dst, cfg, run_id, tpairs,
+    old_rows, new_rows = _rewrite_parts(spark, snap, cfg, run_id, tpairs,
                                         transform=transform)
     return {"parts_rewritten": len(tpairs), "rows_updated": int(n_upd),
             "rows": int(new_rows), "run_id": run_id}
@@ -2676,8 +2642,8 @@ def register_sql(spark: SparkSession, dst: str,
     and pushes around it as usual). The view name defaults to the
     manifest's table name. ``as_of`` registers a time-travel snapshot
     view instead of the current state. Returns the view name."""
-    m = live_manifest(_read_manifest(spark, dst))
-    name = view or m.select("table").first()["table"]
+    name = view or next(t for t in _Snapshot.read(
+        spark, dst, deletes=False).manifest["table"].to_pylist() if t)
     decode_dataset(spark, dst, as_of=as_of).createOrReplaceTempView(name)
     return name
 

@@ -4,7 +4,7 @@ import pytest
 @pytest.fixture(scope="session")
 def spark():
     from cpp_parquet_spark.session import get_spark
-    s = get_spark("local[8]", app="tests", shuffle_partitions=8)
+    s = get_spark(app="tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -123,10 +123,8 @@ def test_compaction_leaves_deleted_parts(spark, docs, tmp_path):
 def test_purge_rewrites_and_supersedes(spark, docs, tmp_path):
     """purge_deletes applies the vectors, supersedes the vectored parts
     via replaces tombstones, and leaves decode output identical."""
-    from pyspark.sql import functions as F
-
-    from cpp_parquet_spark.engine import (_read_deletes, _read_manifest,
-                                          live_manifest, purge_deletes)
+    from cpp_parquet_spark.engine import (_read_deletes, _Snapshot,
+                                          purge_deletes)
     dst = str(tmp_path / "p1")
     cfg = _make(spark, docs, dst)
     delete_where_in(spark, dst, "doc_id", [1, 5, 7])
@@ -137,10 +135,10 @@ def test_purge_rewrites_and_supersedes(spark, docs, tmp_path):
     assert after == before
     # no live vectored parts remain; second purge is a no-op
     dels = _read_deletes(spark, dst)
-    live = live_manifest(_read_manifest(spark, dst)) \
-        .select("part_id", "run_id")
-    assert dels.select("part_id", "run_id").distinct().join(
-        F.broadcast(live), ["part_id", "run_id"], "left_semi").count() == 0
+    live = _Snapshot.read(spark, dst).manifest
+    live = set(zip(live["part_id"].to_pylist(), live["run_id"].to_pylist()))
+    assert not {tuple(r) for r in dels.select("part_id", "run_id")
+                .distinct().collect()} & live
     assert purge_deletes(spark, dst, cfg)["parts_rewritten"] == 0
     # compaction is allowed again on the rewritten parts
     compact_parts(spark, dst, min_bytes=1 << 30)

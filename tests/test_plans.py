@@ -100,21 +100,31 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "l_quantity" in read and "l_extendedprice" not in read
 
 
-def test_zone_prune_scan_skips_data_column(spark, sf_dir, tmp_path):
-    """decode_where's pruning subquery must read only page metadata —
-    the parquet scan feeding prune_parts cannot touch the `data` blobs."""
-    import os
-    from cpp_parquet_spark.engine import prune_parts
+def test_zone_prune_scan_skips_data_column(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """The snapshot's Spark reader (a dataset not on a local filesystem)
+    collects page metadata with a query whose parquet scans never read
+    the `data` blobs; its bloom-row query reads `data` only under the
+    codec and column filter."""
+    from cpp_parquet_spark import engine
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     dst = str(tmp_path / "zp")
     run_encode(spark, df, dst, CFG)
-    pages = spark.read.parquet(os.path.join(dst, "pages"))
-    parts = prune_parts(pages, "n_chars", lo=100, hi=200)
-    plan = _plan(parts)
+    monkeypatch.setattr(engine, "_local_root", lambda dst: None)
+    snap = engine._Snapshot.read(spark, dst)
+    plan = _plan(engine._meta_query(snap.source))
     scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_lines
     for ln in scan_lines:
         assert "data" not in ln.split("ReadSchema")[1], ln
+    plan = _plan(engine._bloom_query(snap.source, "doc_id"))
+    blob_scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln
+                  and "data" in ln.split("ReadSchema")[1]]
+    assert blob_scans
+    for ln in blob_scans:
+        pushed = ln.split("PushedFilters")[1].split("ReadSchema")[0]
+        assert "EqualTo(codec,__bloom__)" in pushed, ln
+        assert "EqualTo(column,doc_id)" in pushed, ln
 
 
 def test_scan_column_reads_only_hot_pages_metadata_filter(spark, sf_dir,

@@ -168,24 +168,23 @@ def test_compact_parts_end_to_end(spark, sf_dir, tmp_path):
     """Small-part compaction: page-move (no re-encode) merge, atomic
     manifest+tombstone commit, decode equality, resume still no-op."""
     from dataclasses import replace
-    from pyspark.sql import functions as F
     from cpp_parquet_spark.engine import (
-        COMPACT_PART_BASE, _read_manifest, compact_parts, decode_dataset,
-        live_manifest, read_committed_pages, run_encode, verify_roundtrip)
+        COMPACT_PART_BASE, _Snapshot, compact_parts, decode_dataset,
+        read_committed_pages, run_encode, verify_roundtrip)
     from cpp_parquet_spark.partitioning import EncodeConfig
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     dst = str(tmp_path / "ds")
     cfg = EncodeConfig(keys=("source",), salt_from=(), num_parts=8,
                        order_keys=("doc_id",), table_name="documents")
     run_encode(spark, df, dst, cfg)
-    pre_live = live_manifest(_read_manifest(spark, dst))
-    pre_parts = pre_live.count()
+    pre_parts = _Snapshot.read(spark, dst).manifest.num_rows
     assert pre_parts >= 2
     res = compact_parts(spark, dst, min_bytes=1 << 30, target_bytes=1 << 30)
     assert res["bins"] >= 1 and res["parts_compacted"] == pre_parts
-    live = live_manifest(_read_manifest(spark, dst))
-    assert live.count() == res["bins"]
-    assert live.filter(F.col("part_id") < COMPACT_PART_BASE).count() == 0
+    live = _Snapshot.read(spark, dst).manifest
+    assert live.num_rows == res["bins"]
+    assert not [p for p in live["part_id"].to_pylist()
+                if p < COMPACT_PART_BASE]
     # decoded content identical to source after the move
     dec = decode_dataset(spark, dst)
     assert dec.count() == df.count()

@@ -250,7 +250,7 @@ def test_stream_then_compact_and_sql(spark, tmp_path):
     without changing the decoded relation, and the SQL front door reads
     the dataset either way."""
     from cpp_parquet_spark.engine import (
-        _read_manifest, compact_parts, live_manifest, register_sql)
+        _Snapshot, compact_parts, register_sql)
     src = str(tmp_path / "in2")
     dst = str(tmp_path / "enc2")
     _drop_files(src, [("a", 100), ("b", 101)], 200)
@@ -262,7 +262,7 @@ def test_stream_then_compact_and_sql(spark, tmp_path):
     q2 = stream_encode(spark, src, schema, dst, CFG)
     q2.awaitTermination(120)
 
-    pre = live_manifest(_read_manifest(spark, dst)).count()
+    pre = _Snapshot.read(spark, dst).manifest.num_rows
     res = compact_parts(spark, dst, min_bytes=1 << 30, target_bytes=1 << 30)
     assert res["parts_compacted"] == pre and res["bins"] >= 1
     view = register_sql(spark, dst, "enc_stream")

@@ -52,7 +52,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> int:
     from cpp_parquet_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark("local[8]", app="contract_check")
+    spark = get_spark(app="contract_check")
 
     print("== entry() smoke ==")
     edf = entrymod.entry(spark)

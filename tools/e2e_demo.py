@@ -14,7 +14,8 @@ only the byte count differs):
   5. compact           small-part maintenance (no re-encode, one narrow
                        shuffle of moved bytes)
   6. range query       decode_where on the range column: parts pruned by
-                       zone maps from the metadata scan alone
+                       zone maps on the driver, from the read's metadata
+                       snapshot (no Spark job, no page blob)
   7. point lookup      bloom-pruned equality on `commit`
   8. projection        decode_dataset(columns=[...]) — blob scan touches
                        only the projected columns
