@@ -1126,7 +1126,9 @@ def _as_of_micros(spark: SparkSession, as_of) -> int:
     """``F.lit(as_of).cast("timestamp")`` as epoch microseconds: on the
     driver for a datetime (naive = local time, pyspark's own
     conversion), a date or an ISO string (without a zone: the session
-    time zone); any other form takes Spark's own cast, one job."""
+    time zone); any other form takes Spark's own cast, one job. A form
+    that cast cannot read either raises ``ValueError``: a NULL cut-off
+    must not read as "no ``as_of``"."""
     import datetime as dt
     from zoneinfo import ZoneInfo
     try:
@@ -1142,8 +1144,11 @@ def _as_of_micros(spark: SparkSession, as_of) -> int:
             return T.TimestampType().toInternal(t)
     except (ValueError, KeyError, OSError):
         pass
-    return spark.range(1).select(
+    micros = spark.range(1).select(
         F.unix_micros(F.lit(as_of).cast("timestamp"))).first()[0]
+    if micros is None:
+        raise ValueError(f"as_of {as_of!r} is not a timestamp")
+    return micros
 
 
 def _zone_may_hit(mn, mx, lo, hi, conv) -> bool:
@@ -1360,10 +1365,13 @@ class _Snapshot:
     def layout_rows(self, pairs: set | None = None) -> set:
         """The (col_idx, column, type) triples of the data pages."""
         import pyarrow.compute as pc
+        where = pc.greater_equal(self.meta["col_idx"], 0)
+        if pairs is None:
+            return set(self._rows("col_idx", "column", "type", where=where))
         k = len(self.keys)
         rows = self._rows(*self.keys, "col_idx", "column", "type",
-                          where=pc.greater_equal(self.meta["col_idx"], 0))
-        return {r[k:] for r in rows if pairs is None or r[:k] in pairs}
+                          where=where)
+        return {r[k:] for r in rows if r[:k] in pairs}
 
     def page_pairs(self) -> set:
         """Live pairs that hold any page row."""
@@ -1429,6 +1437,9 @@ class _Snapshot:
         ``hashes`` (``_probe_hashes``)."""
         if not self.sidecar_pairs(column, "__bloom__"):
             return set()
+        return self._maybe_pairs(column, hashes)
+
+    def _maybe_pairs(self, column: str, hashes: np.ndarray) -> set:
         t = self._bloom_rows(column)
         maybe = _bloom_maybe(t["params"].to_pylist(), t["data"], hashes)
         pairs = zip(*(t[k].to_pylist() for k in self.keys))
@@ -1442,7 +1453,7 @@ class _Snapshot:
         if not indexed:
             return None
         hashes = _probe_hashes(values)
-        hits = set() if hashes is None else self.bloom_hits(column, hashes)
+        hits = set() if hashes is None else self._maybe_pairs(column, hashes)
         return hits | (self.page_pairs() - indexed)
 
     def frame(self, spark: SparkSession) -> DataFrame:
