@@ -16,14 +16,22 @@ from pyspark.sql import functions as F
 from cpp_parquet_spark import dedup, multimodal, quantize, similarity, textops
 
 
+# Both fixtures unpersist at module end: while a cache of a file lives,
+# Spark serves every later read of that file from it, in other modules
+# too, and that changes their plans (a union over a cached leaf runs
+# its shuffle once per branch).
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 # ---------------------------------------------------------------------------
