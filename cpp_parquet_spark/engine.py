@@ -552,6 +552,129 @@ def encode_table(df: DataFrame, cfg: EncodeConfig,
     return pages
 
 
+def _out_schema(columns: list[tuple[str, str]]) -> T.StructType:
+    """The Spark schema of decoded rows of ``columns`` [(name, tag), ...]."""
+    return T.StructType([T.StructField(c, pagecodec.spark_type_for(t))
+                         for c, t in columns])
+
+
+def _blob_views(col) -> list:
+    """Zero-copy page blobs: numpy views over an Arrow binary column's
+    data buffer instead of to_pylist's per-blob bytes copies (~the whole
+    compressed dataset re-copied once per decode); every consumer
+    (np.frombuffer, zlib.crc32/decompress) takes the buffer protocol."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if not len(col):
+        return []
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(col.buffers()[1], width, count=len(col) + 1,
+                         offset=col.offset * np.dtype(width).itemsize)
+    vals = np.frombuffer(col.buffers()[2], np.uint8, count=int(offs[-1]))
+    return [vals[offs[i]:offs[i + 1]] for i in range(len(col))]
+
+
+def decode_part(tbl: pa.Table, columns: list[tuple[str, str]]) -> pa.Table:
+    """One part's pages (and its ``__delete__`` rows) -> its rows of
+    ``columns`` [(name, tag), ...]: the ONE decode kernel. The grouped
+    and colocated paths of ``decode_table`` and the driver path
+    (``_driver_decode``) differ only in how pages reach it."""
+    cols = [c for c, _ in columns]
+    tags = [t for _, t in columns]
+    out_arrow = pa.schema(
+        [(c, _spark_arrow_type(t)) for c, t in zip(cols, tags)])
+    # run_id MUST be a page sort key when present: streaming appends
+    # reuse the hash part-id space, so one part_id can hold pages from
+    # several runs with overlapping page_ids — without run_id in the
+    # order, Arrow's stable sort breaks the tie by shuffle-arrival
+    # order, which can differ per column, zipping rows from different
+    # runs together (same bug class as the compact_parts window fix)
+    has_run = "run_id" in tbl.column_names
+    tbl = tbl.sort_by([("col_idx", "ascending"), ("run_id", "ascending"),
+                       ("page_id", "ascending")] if has_run else
+                      [("col_idx", "ascending"), ("page_id", "ascending")])
+    colnames = tbl.column("column").to_pylist()
+    params = tbl.column("params").to_pylist()
+    codecs = tbl.column("codec").to_pylist()
+    types_ = tbl.column("type").to_pylist()
+    nvals = tbl.column("num_values").to_pylist()
+    nnull = tbl.column("null_count").to_pylist()
+    datas = _blob_views(tbl.column("data"))
+    # schema evolution: appended runs may add or drop columns, so a
+    # part can hold pages for different column sets per run. Decode
+    # per (column, run) and splice NULL runs where a column is absent
+    # — without this, a column missing from one run would zip rows
+    # from DIFFERENT runs together (silent misalignment) or shear
+    # the table (unequal column lengths).
+    run_ids = (tbl.column("run_id").to_pylist() if has_run
+               else [""] * len(colnames))
+    arrays: dict[tuple[str, str], list] = {}
+    run_rows: dict[str, int] = {}
+    col_rows: dict[tuple[str, str], int] = {}
+    del_bits: dict[str, list] = {}      # run -> deletion bitmaps (OR'd)
+    for i in range(len(colnames)):
+        # any "__"-prefixed codec except deletion vectors is a
+        # metadata sidecar (bloom / agg / meta), never a data page
+        if colnames[i] == META_COL or (codecs[i].startswith("__")
+                                       and codecs[i] != "__delete__"):
+            continue
+        if codecs[i] == "__delete__":
+            del_bits.setdefault(run_ids[i], []).append(
+                (datas[i], int(nvals[i])))
+            continue
+        arr = pagecodec.decode_page(datas[i], params[i], codecs[i],
+                                    types_[i], int(nvals[i]), int(nnull[i]))
+        key = (colnames[i], run_ids[i])
+        arrays.setdefault(key, []).append(arr)
+        col_rows[key] = col_rows.get(key, 0) + len(arr)
+    for (c, r), n in col_rows.items():
+        prev = run_rows.setdefault(r, n)
+        if prev != n:
+            raise ValueError(
+                f"run {r!r}: column {c!r} decodes {n} rows but a "
+                f"sibling column decodes {prev} — corrupt part")
+    runs = sorted(run_rows)          # matches the (run_id, page_id) sort
+    out = []
+    for c, t in zip(cols, tags):
+        want = pagecodec.arrow_type_for(t)
+        chunks = []
+        for r in runs:
+            got = arrays.get((c, r))
+            if got is not None:
+                chunks.extend(got)
+            elif run_rows[r]:
+                chunks.append(pa.nulls(run_rows[r], want))
+        if not chunks:
+            out.append(pa.nulls(0, want))
+            continue
+        # NO combine_chunks: it is a full copy of the decoded
+        # payload (measured ~41 ms / 50 MB even for one chunk);
+        # pa.table accepts chunked columns and to_batches slices
+        # them zero-copy
+        merged = pa.chunked_array(chunks)
+        out.append(merged.cast(want) if merged.type != want else merged)
+    result = pa.table(out, schema=out_arrow)
+    if del_bits:
+        # deletion vectors (row-level delete sidecars): OR the
+        # bitmaps per run, splice into one keep mask over the runs'
+        # concatenation order, one filter pass
+        keeps = []
+        for r in runs:
+            n = run_rows[r]
+            dead = np.zeros(n, dtype=bool)
+            for blob, n_rows in del_bits.get(r, ()):
+                if n_rows != n:
+                    raise ValueError(
+                        f"run {r!r}: deletion vector covers {n_rows} "
+                        f"rows but the run decodes {n} — stale sidecar")
+                dead |= np.unpackbits(np.asarray(blob, np.uint8),
+                                      count=n).view(bool)
+            keeps.append(~dead)
+        mask = np.concatenate(keeps) if keeps else np.ones(0, bool)
+        result = result.filter(pa.array(mask))
+    return result
+
+
 def decode_table(pages: DataFrame, spark: SparkSession | None = None,
                  columns: list[tuple[str, str]] | None = None,
                  colocated: bool = False) -> DataFrame:
@@ -580,113 +703,11 @@ def decode_table(pages: DataFrame, spark: SparkSession | None = None,
     partition); prefer the default grouped path when unsure."""
     columns = columns or _column_layout(pages)
     cols = [c for c, _ in columns]
-    tags = [t for _, t in columns]
-    out_fields = [T.StructField(c, pagecodec.spark_type_for(t)) for c, t in zip(cols, tags)]
-    out_schema = T.StructType(out_fields)
-    out_arrow = pa.schema(
-        [(c, _spark_arrow_type(t)) for c, t in zip(cols, tags)])
-    # run_id MUST be a page sort key when present: streaming appends
-    # reuse the hash part-id space, so one part_id can hold pages from
-    # several runs with overlapping page_ids — without run_id in the
-    # order, Arrow's stable sort breaks the tie by shuffle-arrival
-    # order, which can differ per column, zipping rows from different
-    # runs together (same bug class as the compact_parts window fix)
     has_run = "run_id" in pages.columns
-    sort_keys = ([("col_idx", "ascending"), ("run_id", "ascending"),
-                  ("page_id", "ascending")] if has_run else
-                 [("col_idx", "ascending"), ("page_id", "ascending")])
+    out_schema = _out_schema(columns)
 
-    def decode_part(tbl: pa.Table) -> pa.Table:
-        tbl = tbl.sort_by(sort_keys)
-        colnames = tbl.column("column").to_pylist()
-        params = tbl.column("params").to_pylist()
-        codecs = tbl.column("codec").to_pylist()
-        types_ = tbl.column("type").to_pylist()
-        nvals = tbl.column("num_values").to_pylist()
-        nnull = tbl.column("null_count").to_pylist()
-        # zero-copy page blobs: numpy views over the Arrow data buffer
-        # instead of to_pylist's per-blob bytes copies (~the whole
-        # compressed dataset re-copied once per decode); every consumer
-        # (np.frombuffer, zlib.crc32/decompress) takes the buffer protocol
-        dcol = tbl.column("data").combine_chunks()
-        doffs = np.frombuffer(dcol.buffers()[1], np.int32,
-                              count=len(dcol) + 1, offset=dcol.offset * 4)
-        dvals = np.frombuffer(dcol.buffers()[2], np.uint8,
-                              count=int(doffs[-1]))
-        datas = [dvals[doffs[i]:doffs[i + 1]] for i in range(len(dcol))]
-        # schema evolution: appended runs may add or drop columns, so a
-        # part can hold pages for different column sets per run. Decode
-        # per (column, run) and splice NULL runs where a column is absent
-        # — without this, a column missing from one run would zip rows
-        # from DIFFERENT runs together (silent misalignment) or shear
-        # the table (unequal column lengths).
-        run_ids = (tbl.column("run_id").to_pylist() if has_run
-                   else [""] * len(colnames))
-        arrays: dict[tuple[str, str], list] = {}
-        run_rows: dict[str, int] = {}
-        col_rows: dict[tuple[str, str], int] = {}
-        del_bits: dict[str, list] = {}      # run -> deletion bitmaps (OR'd)
-        for i in range(len(colnames)):
-            # any "__"-prefixed codec except deletion vectors is a
-            # metadata sidecar (bloom / agg / meta), never a data page
-            if colnames[i] == META_COL or (codecs[i].startswith("__")
-                                           and codecs[i] != "__delete__"):
-                continue
-            if codecs[i] == "__delete__":
-                del_bits.setdefault(run_ids[i], []).append(
-                    (datas[i], int(nvals[i])))
-                continue
-            arr = pagecodec.decode_page(datas[i], params[i], codecs[i],
-                                        types_[i], int(nvals[i]), int(nnull[i]))
-            key = (colnames[i], run_ids[i])
-            arrays.setdefault(key, []).append(arr)
-            col_rows[key] = col_rows.get(key, 0) + len(arr)
-        for (c, r), n in col_rows.items():
-            prev = run_rows.setdefault(r, n)
-            if prev != n:
-                raise ValueError(
-                    f"run {r!r}: column {c!r} decodes {n} rows but a "
-                    f"sibling column decodes {prev} — corrupt part")
-        runs = sorted(run_rows)          # matches the (run_id, page_id) sort
-        out = []
-        for c, t in zip(cols, tags):
-            want = pagecodec.arrow_type_for(t)
-            chunks = []
-            for r in runs:
-                got = arrays.get((c, r))
-                if got is not None:
-                    chunks.extend(got)
-                elif run_rows[r]:
-                    chunks.append(pa.nulls(run_rows[r], want))
-            if not chunks:
-                out.append(pa.nulls(0, want))
-                continue
-            # NO combine_chunks: it is a full copy of the decoded
-            # payload (measured ~41 ms / 50 MB even for one chunk);
-            # pa.table accepts chunked columns and to_batches slices
-            # them zero-copy
-            merged = pa.chunked_array(chunks)
-            out.append(merged.cast(want) if merged.type != want else merged)
-        result = pa.table(out, schema=out_arrow)
-        if del_bits:
-            # deletion vectors (row-level delete sidecars): OR the
-            # bitmaps per run, splice into one keep mask over the runs'
-            # concatenation order, one filter pass
-            keeps = []
-            for r in runs:
-                n = run_rows[r]
-                dead = np.zeros(n, dtype=bool)
-                for blob, n_rows in del_bits.get(r, ()):
-                    if n_rows != n:
-                        raise ValueError(
-                            f"run {r!r}: deletion vector covers {n_rows} "
-                            f"rows but the run decodes {n} — stale sidecar")
-                    dead |= np.unpackbits(np.asarray(blob, np.uint8),
-                                          count=n).view(bool)
-                keeps.append(~dead)
-            mask = np.concatenate(keeps) if keeps else np.ones(0, bool)
-            result = result.filter(pa.array(mask))
-        return result
+    def decode(tbl: pa.Table) -> pa.Table:
+        return decode_part(tbl, columns)
 
     if colocated:
         want_cols = set(cols)
@@ -728,10 +749,10 @@ def decode_table(pages: DataFrame, spark: SparkSession | None = None,
                         f"{sorted(want_cols)} — columns split across "
                         "partitions (or a schema-evolved dataset); use "
                         "the default grouped path")
-                yield from decode_part(sub).to_batches()
+                yield from decode_part(sub, columns).to_batches()
         return pages.mapInArrow(decode_partition, out_schema)
 
-    return pages.groupBy("part_id").applyInArrow(decode_part, out_schema)
+    return pages.groupBy("part_id").applyInArrow(decode, out_schema)
 
 
 # zone-map text -> SQL cast target per tag (see pagecodec.page_minmax);
@@ -827,19 +848,47 @@ def decode_where(pages: DataFrame, column: str, lo=None, hi=None,
     read's frame (``read_live_pages``) plans with no Spark job, any
     other frame with one collect of its metadata rows.
 
+    Which path decodes: on a local durable read's frame whose surviving
+    data pages decode to at most ``_DRIVER_DECODE_BYTES``, the decode
+    runs on the driver, EAGERLY at this call (``_driver_decode``): the
+    result is a local relation, and a corrupt page raises here. Driver
+    memory then also holds those decoded rows (at most the cap) besides
+    the snapshot. Above the cap, and on any other frame, the survivors
+    decode lazily in ``decode_table``'s grouped Spark job.
+
     ``more``: extra conjunctive predicates [(column, lo, hi), ...] —
     each prunes independently and the surviving-part sets intersect
     (AND semantics), then every residual filter applies post-decode."""
-    snap = _snapshot_of(pages)
-    cols_hint = columns or _column_layout(pages)
-    preds = [(column, lo, hi)] + list(more or [])
-    parts = set.intersection(*[
-        snap.zone_pairs(col, plo, phi, _column_tag(pages, col, cols_hint))
-        for col, plo, phi in preds])
-    pruned = _keep_parts(pages, parts, snap.keys)
-    out = decode_table(pruned, spark, columns=cols_hint)
+    return _decode_where(spark or pages.sparkSession, _snapshot_of(pages),
+                         lambda: pages, columns or _column_layout(pages),
+                         _column_layout(pages),
+                         [(column, lo, hi)] + list(more or []))
+
+
+def _decode_where(spark: SparkSession, snap: "_Snapshot", frame,
+                  columns: list[tuple[str, str]],
+                  layout: list[tuple[str, str]], preds: list[tuple]
+                  ) -> DataFrame:
+    """``decode_where`` over a snapshot and the ``layout`` of its pages
+    frame; ``frame()`` builds that frame only when the read goes the
+    distributed way."""
+    tags = {**dict(layout), **dict(columns)}
+    parts = set.intersection(*[snap.zone_pairs(col, plo, phi, tags.get(col))
+                               for col, plo, phi in preds])
+
+    def keep(t: pa.Table):
+        import pyarrow.compute as pc
+        masks = [_range_mask(t[col], tags.get(col), plo, phi)
+                 for col, plo, phi in preds if col in t.column_names]
+        masks = [m for m in masks if m is not None]
+        return functools.reduce(pc.and_, masks) if masks else None
+
+    out = _driver_decode(spark, snap, parts, columns, layout, keep)
+    if out is None:
+        out = decode_table(_keep_parts(frame(), parts, snap.keys), spark,
+                           columns=columns)
     for col, plo, phi in preds:
-        tag = _column_tag(pages, col, cols_hint)
+        tag = tags.get(col)
         c = F.col(col)
         cast = None
         if tag in ("ts", "tsn"):  # zone domain is epoch microseconds
@@ -855,6 +904,92 @@ def decode_where(pages: DataFrame, column: str, lo=None, hi=None,
         if phi is not None:
             out = out.filter(c <= _zone_lit(phi, cast))
     return out
+
+
+def _per_part(t: pa.Table, fn) -> list:
+    """``fn`` over each part's rows of pages table ``t``: the driver's
+    ``groupBy("part_id")``."""
+    t = t.sort_by("part_id")
+    ids = t["part_id"].to_numpy()
+    cuts = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
+    return [fn(t.slice(a, b - a)) for a, b in zip(cuts[:-1], cuts[1:])
+            if b > a]
+
+
+def _driver_decode(spark: SparkSession, snap: "_Snapshot", kept: set | None,
+                   columns: list[tuple[str, str]],
+                   layout: list[tuple[str, str]], keep) -> DataFrame | None:
+    """The ``kept`` pairs (None: every live pair) of a frame with
+    ``layout`` decoded to ``columns`` on the driver, or None when the
+    read goes the distributed way (``_Snapshot.driver_pages``). The
+    pages are read with pyarrow and decoded by ``decode_part`` per part;
+    ``keep(table)`` gives a mask that keeps at least every row the
+    caller's Spark filter keeps (or None), so fewer rows cross into the
+    JVM; that filter, applied after, stays exact. The result is a local
+    relation: no Python task, no shuffle, no page blob bridged."""
+    have = {c for c, _ in layout}
+    pages = snap.driver_pages(kept, [c for c, _ in columns if c in have])
+    if pages is None:
+        return None
+    out_arrow = pa.schema([(c, _spark_arrow_type(t)) for c, t in columns])
+    parts = _per_part(pages, lambda p: decode_part(p, columns))
+    t = pa.concat_tables(parts) if parts else out_arrow.empty_table()
+    mask = keep(t) if t.num_rows else None
+    if mask is not None:
+        t = t.filter(mask)
+    return _local_frame(spark, t, _out_schema(columns))
+
+
+def _local_frame(spark: SparkSession, t: pa.Table,
+                 schema: T.StructType) -> DataFrame:
+    """``t`` as a local relation, sent as its non-empty record batches,
+    or one empty batch when it has no row: pyspark 4.1's
+    ``createDataFrame`` drops the rows that follow two empty batches,
+    and cannot rebuild a nested column that has no chunk at all."""
+    batches = [b for b in t.to_batches() if b.num_rows]
+    t = (pa.Table.from_batches(batches, t.schema) if batches
+         else t.schema.empty_table())
+    return spark.createDataFrame(t, schema=schema)
+
+
+def _range_mask(arr: pa.ChunkedArray, tag: str | None, lo, hi):
+    """Decoded values that may lie in [lo, hi] (zone domain, see
+    ``prune_parts``): keeps at least every row ``decode_where``'s Spark
+    filter keeps; None when the bounds do not compare in Arrow."""
+    import pyarrow.compute as pc
+    from decimal import ROUND_HALF_UP, Decimal
+    if tag in ("ts", "tsn"):
+        arr = arr.cast(pa.int64())
+    elif tag == "date":
+        arr = arr.cast(pa.int32())
+    elif tag == "bool":
+        arr = arr.cast(pa.int8())
+    try:
+        if tag == "tsn":
+            # Spark reads the wall time in the session time zone: widen
+            # by a day, more than any zone offset
+            day = 86_400_000_000
+            lo, hi = (None if lo is None else lo - day,
+                      None if hi is None else hi + day)
+        elif tag and (pagecodec.is_dec(tag) or pagecodec.is_dec38(tag)):
+            # Spark casts a bound to decimal(38, s), rounding half up
+            q = Decimal(1).scaleb(-pagecodec.dec_precision_scale(tag)[1])
+            lo, hi = (None if b is None else
+                      Decimal(str(b)).quantize(q, ROUND_HALF_UP)
+                      for b in (lo, hi))
+        conds = []
+        if lo is not None:
+            conds.append(pc.greater_equal(arr, pa.scalar(lo)))
+        if hi is not None:
+            conds.append(pc.less_equal(arr, pa.scalar(hi)))
+        if not conds:
+            return None
+        m = functools.reduce(pc.and_, conds)
+        if tag in pagecodec.FLOAT_TAGS:     # Spark orders NaN above all
+            m = pc.or_(m, pc.is_nan(arr))
+        return pc.fill_null(m, False)
+    except (pa.ArrowException, TypeError, ValueError, ArithmeticError):
+        return None
 
 
 def scan_column(pages: DataFrame, column: str, lo=None, hi=None,
@@ -913,15 +1048,7 @@ def scan_column(pages: DataFrame, column: str, lo=None, hi=None,
         for b in batches:
             if b.num_rows == 0:
                 continue
-            # zero-copy page blobs: numpy views over the Arrow data
-            # buffer (same pattern as decode_table) instead of per-blob
-            # .as_py() bytes copies of ~1 MiB pages
-            dcol = b.column("data")
-            doffs = np.frombuffer(dcol.buffers()[1], np.int32,
-                                  count=len(dcol) + 1,
-                                  offset=dcol.offset * 4)
-            dvals = np.frombuffer(dcol.buffers()[2], np.uint8,
-                                  count=int(doffs[-1]))
+            datas = _blob_views(b.column("data"))
             params = b.column("params").to_pylist()
             codecs_ = b.column("codec").to_pylist()
             types_ = b.column("type").to_pylist()
@@ -933,7 +1060,7 @@ def scan_column(pages: DataFrame, column: str, lo=None, hi=None,
             arrs = []
             for i in range(b.num_rows):
                 arr = pagecodec.decode_page(
-                    dvals[doffs[i]:doffs[i + 1]], params[i], codecs_[i],
+                    datas[i], params[i], codecs_[i],
                     types_[i], int(nvals[i]), int(nnull[i]))
                 if has_dels and bitmaps[i]:
                     off, n = int(row_offs[i]), len(arr)
@@ -1108,7 +1235,17 @@ def _read_manifest(spark: SparkSession, dst: str) -> DataFrame:
 
 #: the pages' small columns: everything a plan needs, never a page blob
 _META_COLS = ["part_id", "run_id", "column", "col_idx", "type", "codec",
-              "min_v", "max_v"]
+              "min_v", "max_v", "raw_bytes"]
+
+#: a read whose kept data pages decode to at most this many bytes
+#: (their ``raw_bytes``) finishes on the driver (``_driver_decode``): no
+#: Python task, no shuffle, no page blob crossing into the JVM. Kernels
+#: decode 60-140 MB/s per thread, so 32 MiB costs about what the fixed
+#: ~0.3 s of a Spark decode does; the measured sweep is in CHANGES.md.
+_DRIVER_DECODE_BYTES = 32 << 20
+
+#: the page columns a decode needs beyond ``_META_COLS``
+_PAGE_READ_COLS = ["page_id", "params", "data", "num_values", "null_count"]
 
 _ARROW_PAIR = [("part_id", pa.int32()), ("run_id", pa.string())]
 
@@ -1417,20 +1554,75 @@ class _Snapshot:
         else:
             import pyarrow.compute as pc
             m = self.meta
-            t = m.filter(pc.and_(pc.equal(m["codec"], "__bloom__"),
-                                 pc.equal(m["column"], column))).sort_by(
-                [("__file", "ascending"), ("__row", "ascending")])
-            fidx = t["__file"].to_numpy()
-            pos = t["__row"].to_numpy()
-            blobs = {"params": [], "data": []}
-            for f in np.unique(fidx):
-                for c, got in blobs.items():
-                    got.append(read_rows(self.files[int(f)], c,
-                                         pos[fidx == f]))
-            for c, got in blobs.items():
-                t = t.append_column(c, pa.chunked_array(got))
+            t = self._read_at(m.filter(pc.and_(
+                pc.equal(m["codec"], "__bloom__"),
+                pc.equal(m["column"], column))), ["params", "data"])
         self._blooms[column] = t
         return t
+
+    def _read_at(self, t: pa.Table, names: list[str]) -> pa.Table:
+        """Metadata rows ``t`` of the pyarrow reader, in file order, with
+        the pages' ``names`` columns read at their ``__file`` / ``__row``
+        positions (``interop.read_rows``: only the parquet pages holding
+        those rows are decoded)."""
+        t = t.sort_by([("__file", "ascending"), ("__row", "ascending")])
+        fidx = t["__file"].to_numpy()
+        pos = t["__row"].to_numpy()
+        files = np.unique(fidx)
+        for c in names:
+            got = [read_rows(self.files[int(f)], c, pos[fidx == f])
+                   for f in files]
+            t = t.append_column(c, pa.chunked_array(
+                got, None if got else _PAGES_DS_SCHEMA.field(c).type))
+        return t
+
+    def driver_pages(self, pairs: set | None, columns: list[str],
+                     deletes: bool = True) -> pa.Table | None:
+        """The data pages of ``columns`` in ``pairs`` (None: every live
+        pair), with the pairs' delete rows unless ``deletes`` is False,
+        read on the driver as a pages table — or None when the read must
+        go the distributed way: a snapshot of the Spark reader, or kept
+        pages that decode to more than ``_DRIVER_DECODE_BYTES``. Delete
+        rows come from ``deletes`` (cut at ``as_of`` and to live pairs),
+        their bitmaps from ``deletes/``."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        if self.pages_dir is None:
+            return None
+        m = self.meta
+        m = m.filter(pc.and_(pc.greater_equal(m["col_idx"], 0),
+                             pc.is_in(m["column"],
+                                      pa.array(columns, pa.string()))))
+        if pairs is not None:
+            m = _where_pairs(m, pairs.__contains__)
+        if (pc.sum(m["raw_bytes"]).as_py() or 0) > _DRIVER_DECODE_BYTES:
+            return None
+        t = self._read_at(m, _PAGE_READ_COLS).select(
+            _PAIR_KEYS + ["column", "col_idx", "codec", "type"]
+            + _PAGE_READ_COLS)
+        d = self.deletes
+        if pairs is not None:
+            d = _where_pairs(d, pairs.__contains__)
+        if not deletes or not d.num_rows:
+            return t
+        ids = set(zip(*(d[c].to_pylist() for c in _DELETE_ID)))
+        b = ds.dataset(os.path.join(os.path.dirname(self.pages_dir),
+                                    "deletes"),
+                       format="parquet", schema=_BITMAPS_ARROW).to_table(
+            filter=ds.field("part_id").isin(sorted({k[0] for k in ids})))
+        b = b.filter(pa.array(
+            [k in ids for k in zip(*(b[c].to_pylist() for c in _DELETE_ID))],
+            pa.bool_()))
+        n = b.num_rows
+        dels = pa.table({
+            "part_id": b["part_id"], "run_id": b["run_id"],
+            "column": pa.array([DELETE_CODEC] * n), "col_idx":
+            pa.array(np.full(n, -1, np.int32)), "codec":
+            pa.array([DELETE_CODEC] * n), "type": pa.array(["bin"] * n),
+            "page_id": pa.array(np.zeros(n, np.int32)),
+            "params": pa.array(["{}"] * n), "data": b["bitmap"],
+            "num_values": b["n_rows"], "null_count": b["n_del"]})
+        return pa.concat_tables([t, dels.cast(t.schema)])
 
     def bloom_hits(self, column: str, hashes: np.ndarray) -> set:
         """Pairs whose bloom rows for ``column`` MAYBE hold any of
@@ -1523,6 +1715,11 @@ _MANIFEST_ARROW = pa.schema(_ARROW_PAIR + [
     ("replaces", pa.list_(pa.struct(_ARROW_PAIR)))])
 _DELETES_ARROW = pa.schema(_ARROW_PAIR + [("delete_id", pa.string()),
                                           ("created_at", pa.timestamp("us"))])
+_PAIR_KEYS = [k for k, _ in _ARROW_PAIR]
+_DELETE_ID = _PAIR_KEYS + ["delete_id"]       # one delete row's key
+_BITMAPS_ARROW = pa.schema(_ARROW_PAIR + [
+    ("delete_id", pa.string()), ("n_rows", pa.int64()),
+    ("n_del", pa.int64()), ("bitmap", pa.binary())])
 
 
 def read_committed_pages(spark: SparkSession, dst: str,
@@ -1695,6 +1892,14 @@ def decode_dataset(spark: SparkSession, dst: str,
     job. Driver memory: one metadata row per live page, plus the
     manifest and delete index (one row per part).
 
+    Which path decodes: with ``where`` on a local dataset whose
+    surviving data pages decode to at most ``_DRIVER_DECODE_BYTES``, the
+    decode runs on the driver, EAGERLY at this call, and the result is
+    a local relation (``decode_where``); no pages frame is built. Driver
+    memory then also holds those decoded rows, at most the cap. Above
+    the cap, on a dataset elsewhere, and for every read without
+    ``where``, the rows decode lazily in ``decode_table``'s Spark job.
+
     ``as_of`` (datetime or ISO timestamp string): time-travel snapshot —
     the table as committed at that instant (appends, compactions, purges
     and row-level deletes after it are invisible; possible because page
@@ -1706,29 +1911,35 @@ def decode_dataset(spark: SparkSession, dst: str,
     2-column projection of a 100-column table never touches the other
     98 columns' bytes). The ``where`` column is decoded for its residual
     filter even when not projected, then dropped."""
-    pages = read_live_pages(spark, dst, as_of=as_of)
+    snap = _Snapshot.read(spark, dst, as_of)
+    layout = snap.layout()
     if columns is not None:
-        layout = _column_layout(pages)
         known = [c for c, _ in layout]
         missing = [c for c in columns if c not in known]
         if missing:
             raise ValueError(f"decode_dataset: unknown columns {missing}; "
                              f"dataset has {known}")
         need = set(columns) | ({where[0]} if where is not None else set())
-        snap = getattr(pages, "_cps_snapshot", None)
-        # DELETE_CODEC rows must survive the projection: deletion vectors
-        # apply to every decode regardless of which columns are read
-        pages = pages.filter(F.col("column").isin(list(need) + [DELETE_CODEC]))
-        # keep the layout and snapshot on the filtered frame (decode_table
-        # and decode_where read them)
-        pages._cps_columns = [(c, t) for c, t in layout if c in need]
-        if snap is not None:
-            pages._cps_snapshot = snap
+        layout = [(c, t) for c, t in layout if c in need]
+
+    def frame() -> DataFrame:
+        pages = snap.frame(spark)
+        if columns is not None:
+            # DELETE_CODEC rows must survive the projection: deletion
+            # vectors apply to every decode regardless of which columns
+            # are read
+            pages = pages.filter(F.col("column").isin(
+                [c for c, _ in layout] + [DELETE_CODEC]))
+            # keep the layout and snapshot on the filtered frame
+            # (decode_table and decode_where read them)
+            pages._cps_columns = layout        # type: ignore[attr-defined]
+            pages._cps_snapshot = snap         # type: ignore[attr-defined]
+        return pages
+
     if where is not None:
-        column, lo, hi = where
-        out = decode_where(pages, column, lo, hi, spark)
+        out = _decode_where(spark, snap, frame, layout, layout, [where])
     else:
-        out = decode_table(pages, spark)
+        out = decode_table(frame(), spark)
     return out.select(*columns) if columns is not None else out
 
 
@@ -1827,18 +2038,46 @@ def decode_where_in(pages: DataFrame, column: str, values: list,
     frame one collect of its metadata and those bloom rows. Parts
     without a bloom row for the column are kept, and a column with no
     bloom rows at all (not in ``bloom_cols`` at encode time) decodes in
-    full — an absent index must mean "scan", never "empty result"."""
+    full — an absent index must mean "scan", never "empty result".
+
+    On a local durable read's frame whose surviving data pages decode to
+    at most ``_DRIVER_DECODE_BYTES``, the decode runs on the driver,
+    EAGERLY at this call, and returns a local relation (see
+    ``decode_where``; driver memory then also holds those decoded rows);
+    otherwise the survivors decode lazily in a Spark job."""
     if not values:
         return decode_table(pages.limit(0), spark,
                             columns=_column_layout(pages))
     snap = _snapshot_of(pages, column)
     cols_hint = _column_layout(pages)
     survivors = snap.bloom_pairs(column, values)
-    kept = pages
-    if survivors is not None:
-        kept = _keep_parts(pages, survivors, snap.keys)
-    dec = decode_table(kept, spark, columns=cols_hint)
-    return dec.filter(F.col(column).isin(values))
+    tag = dict(cols_hint).get(column)
+    out = _driver_decode(spark or pages.sparkSession, snap, survivors,
+                         cols_hint, cols_hint,
+                         lambda t: _in_mask(t[column], tag, values))
+    if out is None:
+        kept = pages
+        if survivors is not None:
+            kept = _keep_parts(pages, survivors, snap.keys)
+        out = decode_table(kept, spark, columns=cols_hint)
+    return out.filter(F.col(column).isin(values))
+
+
+def _in_mask(arr: pa.ChunkedArray, tag: str | None, values: list):
+    """Decoded values that may equal one of ``values``: keeps at least
+    every row ``isin(values)`` keeps; None when the values do not
+    compare in Arrow (a timestamp literal takes Spark's time zone)."""
+    import pyarrow.compute as pc
+    if tag in ("ts", "tsn"):
+        return None
+    try:
+        vs = pa.array([v for v in values if v is not None])
+        m = pc.is_in(arr, value_set=vs.cast(arr.type), skip_nulls=True)
+        if tag in pagecodec.FLOAT_TAGS:     # Spark: NaN equals NaN
+            m = pc.or_(m, pc.is_nan(arr))
+        return pc.fill_null(m, False)
+    except (pa.ArrowException, TypeError, ValueError, ArithmeticError):
+        return None
 
 
 def decode_where_eq(pages: DataFrame, column: str, value,
@@ -1874,18 +2113,19 @@ def _read_deletes(spark: SparkSession, dst: str) -> DataFrame | None:
     return spark.read.schema(DELETES_SCHEMA).parquet(d)
 
 
-def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
-                 make_mask) -> dict:
+def _delete_pass(spark: SparkSession, dst: str, snap: "_Snapshot",
+                 column: str, pairs: set | None, make_mask) -> dict:
     """Shared deletion-vector machinery (delete_where_in /
-    delete_where_range): decode ONLY the predicate column's pages of the
-    pruned-in parts, mark rows where ``make_mask(decoded_arrow_array)``
-    is True, and append one position bitmap per affected
-    (part_id, run_id) to ``dst/deletes/`` (positions in the canonical
-    (run_id, page_id) decode order). Idempotent: re-deleting the same
-    predicate rewrites the same bitmaps (sidecars OR together at
-    decode)."""
-    hot = hot.select("part_id", "run_id", "page_id", "codec", "type",
-                     "params", "data", "num_values", "null_count")
+    delete_where_range): decode ONLY ``column``'s pages of the
+    pruned-in ``pairs`` of the dataset's snapshot ``snap`` (None: every
+    live pair), mark rows where ``make_mask(decoded_arrow_array)`` is
+    True, and append one position bitmap per affected (part_id, run_id)
+    to ``dst/deletes/`` (positions in the canonical (run_id, page_id)
+    decode order). When those pages decode to at most
+    ``_DRIVER_DECODE_BYTES`` on a local dataset, the kernel runs on the
+    driver over the pages ``_Snapshot.driver_pages`` reads; otherwise in
+    a grouped Spark job. Idempotent: re-deleting the same predicate
+    rewrites the same bitmaps (sidecars OR together at decode)."""
     out_schema = T.StructType([
         T.StructField("part_id", T.IntegerType()),
         T.StructField("run_id", T.StringType()),
@@ -1893,6 +2133,10 @@ def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
         T.StructField("n_del", T.LongType()),
         T.StructField("bitmap", T.BinaryType()),
     ])
+    out_arrow = pa.schema([
+        ("part_id", pa.int32()), ("run_id", pa.string()),
+        ("n_rows", pa.int64()), ("n_del", pa.int64()),
+        ("bitmap", pa.binary())])
 
     def kernel(tbl: pa.Table) -> pa.Table:
         tbl = tbl.sort_by([("run_id", "ascending"), ("page_id", "ascending")])
@@ -1903,11 +2147,7 @@ def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
         types_ = tbl.column("type").to_pylist()
         nvals = tbl.column("num_values").to_pylist()
         nnull = tbl.column("null_count").to_pylist()
-        dcol = tbl.column("data").combine_chunks()
-        doffs = np.frombuffer(dcol.buffers()[1], np.int32,
-                              count=len(dcol) + 1, offset=dcol.offset * 4)
-        dvals = np.frombuffer(dcol.buffers()[2], np.uint8,
-                              count=int(doffs[-1]))
+        datas = _blob_views(tbl.column("data"))
         out = {"part_id": [], "run_id": [], "n_rows": [], "n_del": [],
                "bitmap": []}
         by_run: dict[str, list] = {}
@@ -1917,7 +2157,7 @@ def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
             masks = []
             for i in idxs:
                 arr = pagecodec.decode_page(
-                    dvals[doffs[i]:doffs[i + 1]], params[i], codecs[i],
+                    datas[i], params[i], codecs[i],
                     types_[i], int(nvals[i]), int(nnull[i]))
                 masks.append(make_mask(arr))
             mask = np.concatenate(masks)
@@ -1928,12 +2168,20 @@ def _delete_pass(spark: SparkSession, dst: str, hot: DataFrame,
                 out["n_rows"].append(mask.shape[0])
                 out["n_del"].append(nd)
                 out["bitmap"].append(np.packbits(mask).tobytes())
-        return pa.Table.from_pydict(out, schema=pa.schema([
-            ("part_id", pa.int32()), ("run_id", pa.string()),
-            ("n_rows", pa.int64()), ("n_del", pa.int64()),
-            ("bitmap", pa.binary())]))
+        return pa.Table.from_pydict(out, schema=out_arrow)
 
-    found = hot.groupBy("part_id").applyInArrow(kernel, out_schema)
+    pages = snap.driver_pages(pairs, [column], deletes=False)
+    if pages is not None:
+        found = _local_frame(spark, pa.concat_tables(
+            [out_arrow.empty_table(), *_per_part(pages, kernel)]), out_schema)
+    else:
+        hot = snap.frame(spark).filter(
+            (F.col("column") == column) & (F.col("col_idx") >= 0))
+        if pairs is not None:
+            hot = _keep_parts(hot, pairs, snap.keys)
+        found = (hot.select("part_id", "run_id", "page_id", "codec", "type",
+                            "params", "data", "num_values", "null_count")
+                 .groupBy("part_id").applyInArrow(kernel, out_schema))
     delete_id = uuid.uuid4().hex[:12]
     (found.withColumn("delete_id", F.lit(delete_id))
           .withColumn("created_at", F.current_timestamp())
@@ -1956,12 +2204,7 @@ def delete_where_in(spark: SparkSession, dst: str, column: str,
     (sidecars OR together at decode)."""
     if not values:
         return {"parts": 0, "rows_deleted": 0}
-    pages = read_committed_pages(spark, dst)
-    snap = pages._cps_snapshot
-    hot = pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0))
-    surv = snap.bloom_pairs(column, values)
-    if surv is not None:
-        hot = _keep_parts(hot, surv, snap.keys)
+    snap = _Snapshot.read(spark, dst, deletes=False)
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -1971,7 +2214,8 @@ def delete_where_in(spark: SparkSession, dst: str, column: str,
         m = pc.fill_null(pc.is_in(arr, value_set=vs), False)
         return m.to_numpy(zero_copy_only=False)
 
-    return _delete_pass(spark, dst, hot, make_mask)
+    return _delete_pass(spark, dst, snap, column,
+                        snap.bloom_pairs(column, values), make_mask)
 
 
 def delete_where_range(spark: SparkSession, dst: str, column: str,
@@ -1988,12 +2232,8 @@ def delete_where_range(spark: SparkSession, dst: str, column: str,
     delete_where_in."""
     if lo is None and hi is None:
         return {"parts": 0, "rows_deleted": 0}
-    pages = read_committed_pages(spark, dst)
-    snap = pages._cps_snapshot
-    tag = _column_tag(pages, column, None)
-    hot = _keep_parts(
-        pages.filter((F.col("column") == column) & (F.col("col_idx") >= 0)),
-        snap.zone_pairs(column, lo, hi, tag), snap.keys)
+    snap = _Snapshot.read(spark, dst, deletes=False)
+    tag = dict(snap.layout()).get(column)
 
     def make_mask(arr: pa.Array) -> np.ndarray:
         import pyarrow.compute as pc
@@ -2010,7 +2250,8 @@ def delete_where_range(spark: SparkSession, dst: str, column: str,
         m = conds[0] if len(conds) == 1 else pc.and_(conds[0], conds[1])
         return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
 
-    return _delete_pass(spark, dst, hot, make_mask)
+    return _delete_pass(spark, dst, snap, column,
+                        snap.zone_pairs(column, lo, hi, tag), make_mask)
 
 
 
@@ -2048,7 +2289,14 @@ def read_live_pages(spark: SparkSession, dst: str, as_of=None) -> DataFrame:
     delete index (one row per part); a bloom probe adds the probed
     column's bloom rows. A frame derived from this one (filtered,
     joined) takes its own snapshot at its first plan: one collect of its
-    metadata rows (``_snapshot_of``)."""
+    metadata rows (``_snapshot_of``).
+
+    Which path decodes: ``decode_where`` / ``decode_where_in`` on this
+    frame (of a local dataset) decode on the driver, EAGERLY at their
+    call, when the surviving data pages decode to at most
+    ``_DRIVER_DECODE_BYTES``; driver memory then also holds those
+    decoded rows. A derived frame, and every read above the cap,
+    decodes lazily in a Spark job."""
     return _Snapshot.read(spark, dst, as_of).frame(spark)
 
 

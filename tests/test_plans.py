@@ -151,12 +151,14 @@ def test_no_shuffle_encode_has_zero_exchanges(docs):
 
 
 def test_pushdown_decode_part_filter_reaches_parquet(spark, sf_dir,
-                                                     tmp_path):
+                                                     tmp_path, monkeypatch):
     """decode_where applies the surviving part ids as a LITERAL
     In(part_id) predicate so the pages-parquet scan skips row groups
-    (a broadcast semi join alone would scan every blob first)."""
-    import os
+    (a broadcast semi join alone would scan every blob first). The
+    driver cap is 0 so this small lake takes the distributed path."""
+    from cpp_parquet_spark import engine
     from cpp_parquet_spark.engine import decode_where, read_committed_pages
+    monkeypatch.setattr(engine, "_DRIVER_DECODE_BYTES", 0)
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     dst = str(tmp_path / "lit")
     run_encode(spark, df, dst, CFG)
