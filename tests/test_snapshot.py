@@ -215,10 +215,10 @@ def test_planner_matches_brute_force(spark, sf_dir, lake, source, state,
                .filter(F.col("part_id") >= 0)]
 
     def check(got_df, kept, match, on_derived=None, proj=None):
-        want_rows = _multiset([r for r in want if match(r)], cols)
+        hits = [r for r in want if match(r)]
+        want_rows = _multiset(hits, cols)
         got = [r.asDict() for r in got_df.collect()]
-        assert _multiset(got, proj or cols) == \
-            _multiset([r for r in want if match(r)], proj or cols)
+        assert _multiset(got, proj or cols) == _multiset(hits, proj or cols)
         if kept is None or kept:
             assert _on_driver(got_df) == driver
         holding = {p for p, rs in by_pair.items() if any(map(match, rs))}
